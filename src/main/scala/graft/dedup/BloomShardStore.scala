@@ -1,13 +1,15 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Partition-local Bloom "URL-seen" shards (Q2, the north rule's 10^10
   * artery; SURVEY §7.4.3 / SCALE.md design — now implemented).
@@ -18,10 +20,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *
   *   - probe(df): repartition df on the bucket column so every bucket's
   *     rows land in exactly one task, then mapPartitions — each task loads
-  *     only the shard files for the buckets it holds (executor-cached by
-  *     (dir, bucket, version)). At the 10^10 design point (≈42 bits/key at
-  *     1e-7 ≈ 52 GB total, 4096 buckets ≈ 13 MB/shard) a task touches a
-  *     handful of shards; nothing is broadcast whole.
+  *     only the shard files for the buckets it holds (executor-cached per
+  *     (dir, bucket), newest fold version only). At the 10^10 design point
+  *     (≈42 bits/key at 1e-7 ≈ 52 GB total, 4096 buckets ≈ 13 MB/shard) a
+  *     task touches a handful of shards; nothing is broadcast whole.
   *   - fold(keys): same repartition; each task merges its buckets' keys
   *     into the shard file via tmp-file + atomic rename. Bucket-to-task
   *     exclusivity makes concurrent shard writes impossible.
@@ -91,24 +93,43 @@ final class BloomShardStore(
     * task (bucket-exclusive repartition), written tmp-then-rename.
     */
   def fold(keys: DataFrame, newVersion: Long): Unit = {
-    val spark = keys.sparkSession
-    import spark.implicits._
+    foldCounting(keys.select(col(keys.columns.head).as("key64")), lit(true), Nil, newVersion)
+    ()
+  }
+
+  /** [[fold]] the `key64` values of the rows of `rows` where `admit` holds,
+    * and count the rows by `groups` in the same job. Returns one row per
+    * (task, group value): the group columns followed by a LONG count, so a
+    * group may appear once per task (callers sum them). With no groups,
+    * returns nothing.
+    */
+  def foldCounting(rows: DataFrame, admit: Column, groups: Seq[Column], newVersion: Long): Array[Row] = {
+    val spark = rows.sparkSession
     val d = dir
     val b = buckets
     val exp = expectedPerBucket
     val f = fpp
-    val col0 = keys.columns.head
+    val projected = rows.select(
+      (col("key64").cast("long").as("__k") +: coalesce(admit, lit(false)).as("__admit") +: groups): _*)
+    val nGroups = groups.size
+    val outSchema = StructType(projected.schema.fields.drop(2) :+ StructField("__n", LongType, nullable = false))
+    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
     val nParts = math.min(b, math.max(1, spark.sparkContext.defaultParallelism))
-    keys
-      .select(col(col0).cast("long").as("key64"))
-      .repartition(nParts, pmod(col("key64"), lit(b)))
-      .as[Long]
-      .foreachPartition { (it: Iterator[Long]) =>
+    val counts = projected
+      .repartition(nParts, pmod(col("__k"), lit(b)))
+      .mapPartitions { it =>
         // group this task's keys by bucket, then touch each shard file once
-        val byBucket = scala.collection.mutable.HashMap.empty[Int, scala.collection.mutable.ArrayBuffer[Long]]
-        it.foreach { k =>
-          val bucket = (((k % b) + b) % b).toInt
-          byBucket.getOrElseUpdate(bucket, scala.collection.mutable.ArrayBuffer.empty[Long]) += k
+        val byBucket = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Long]]
+        val perGroup = mutable.HashMap.empty[Seq[Any], Long].withDefaultValue(0L)
+        it.foreach { r =>
+          if (r.getBoolean(1)) {
+            val k = r.getLong(0)
+            byBucket.getOrElseUpdate((((k % b) + b) % b).toInt, mutable.ArrayBuffer.empty[Long]) += k
+          }
+          if (nGroups > 0) {
+            val g = (2 until 2 + nGroups).map(r.get)
+            perGroup(g) += 1L
+          }
         }
         byBucket.foreach { case (bucket, ks) =>
           val path = shardPath(d, bucket)
@@ -118,8 +139,11 @@ final class BloomShardStore(
           ks.foreach(shard.putLong)
           writeShardAtomic(path, shard)
         }
-      }
+        perGroup.iterator.map { case (g, n) => Row.fromSeq(g :+ n) }
+      }(enc)
+      .collect()
     Files.writeString(Paths.get(d, "version"), newVersion.toString)
+    counts
   }
 
   /** Driver-side point probe (tests / tiny paths). */
@@ -157,20 +181,33 @@ object BloomShardStore {
     } else new BloomShardStore(dir, buckets, expectedPerBucket, fpp)
   }
 
-  /** Executor-local shard cache keyed by (dir, bucket, version): one disk
-    * read per executor per shard per fold-generation, shared across tasks.
+  /** Executor-local shard cache: one filter per (dir, bucket), tagged with
+    * the fold version it was read at — one disk read per executor per shard
+    * per fold-generation, shared across tasks. Loading a newer version
+    * replaces the older filter, so superseded generations do not pile up on
+    * the heap. A request for an older version than the cached one is served
+    * the cached filter: the shard file on disk is at least that new anyway,
+    * and bloom folds only ever add keys.
     */
   object ShardCache {
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-    private val Missing = new AnyRef
+    private final case class Entry(version: Long, shard: BloomFilter) // shard null = no file
+    private val cache = new java.util.concurrent.ConcurrentHashMap[(String, Int), Entry]()
 
     def get(dir: String, bucket: Int, version: Long): BloomFilter = {
-      val key = s"$dir#$bucket#$version"
-      val v = cache.computeIfAbsent(key, { _ =>
-        val p = shardPath(dir, bucket)
-        if (Files.exists(p)) readShard(p) else Missing
-      })
-      if (v eq Missing) null else v.asInstanceOf[BloomFilter]
+      val key = (dir, bucket)
+      val hit = cache.get(key) // lock-free fast path: probes call this per row
+      if (hit != null && hit.version >= version) hit.shard
+      else
+        cache.compute(key, { (_, old) =>
+          if (old != null && old.version >= version) old
+          else {
+            val p = shardPath(dir, bucket)
+            Entry(version, if (Files.exists(p)) readShard(p) else null)
+          }
+        }).shard
     }
+
+    /** Filters cached for `dir` (one per bucket at most). */
+    def cachedShards(dir: String): Int = cache.keySet.asScala.count(_._1 == dir)
   }
 }

@@ -6,6 +6,7 @@ import graft.ml.AdaptiveDelegation
 import graft.oracle.{CrawlConfig, RequestOptions, SeedRequest}
 import graft.queue.FrontierStore
 import graft.schema.RequestState
+import graft.util.Trace
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,19 +16,31 @@ import scala.collection.mutable
 /** The Spark-native crawl loop (SURVEY.md §3.1): an iterative micro-batch
   * driver loop of claim → fetch → handle → commit over the FrontierStore.
   *
-  * Stage structure per micro-batch (all executor-parallel Dataset ops):
-  *   1. claim      — FrontierStore.claim (window top-k under per-host quota)
-  *   2. robots gate— broadcast robots-rules probe (F6)
-  *   3. fetch      — join vs the page table (synthetic fetch, S9); one extra
-  *                   join hop resolves redirects (fixture guarantees
-  *                   redirect targets are terminal)
-  *   4. classify   — status → handled / failed / retry / throttle (F12, R1)
-  *   5. handler    — href extraction (regexp generator, L1), absolutize,
-  *                   strategy + pattern + depth + robots filters (F1-F10),
-  *                   per-page limit (F4), dedup + enqueue via addBatch (Q1)
-  *   6. emit       — image ids joined against the payload table land in the
-  *                   output dataset (D1)
-  *   7. commit     — markHandled / reclaim events + stats row
+  * One micro-batch off the prefetch path runs four Spark executions:
+  *   1. pin      — ONE linear plan, localCheckpoint-ed: the claim
+  *                 (FrontierStore.claimSet, top-k under per-host quota,
+  *                 ranked in claim order), the robots gate (F6), the
+  *                 session-collision check, the status join against the
+  *                 page table (synthetic fetch, S9), one redirect hop with
+  *                 its strategy re-check (F8), and the body digest (links,
+  *                 base URL, blocked flag). Every claimed row keeps a class:
+  *                 fetched, redirect-fail, robots-skip or collided; only
+  *                 fetched rows ever reach statusAtFn.
+  *   2. outcomes — ONE read of the pin before the commit: an aggregate by
+  *                 (outcome, retry count, host when polite) in bench mode,
+  *                 the claim-ordered rows in parity mode. It gives the
+  *                 claimed count, the outcome/image counters and the
+  *                 politeness inputs (claimed and 429s per host, largest
+  *                 Retry-After).
+  *   3. commit   — classify (F12, R1), handler (href extraction L1,
+  *                 absolutize, strategy + pattern + depth + robots filters
+  *                 F1-F10, per-page limit F4), dedup + enqueue, terminal
+  *                 and reclaim events: one delta write (Q1).
+  *   4. fold     — one pass over the committed delta: the store's claim
+  *                 summaries and, in bloom mode, the seen-shards.
+  * Optional features add their own reads of the pin (adaptive feedback,
+  * error snapshots, failed-request handler, image ids, session/proxy
+  * accounting); an idle batch adds one pending count.
   *
   * Politeness (P2-P4) runs on a virtual batch clock: per-host quotas are
   * computed driver-side from robots crawl-delay + 429 backoff state and
@@ -103,22 +116,15 @@ final class CrawlEngine(
 
   def run(seeds: Seq[String]): EngineResult = runRequests(seeds.map(u => SeedRequest(u)))
 
-  private def traceTop[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.contains("GRAFT_TRACE"))
-      println(f"[trace] engine.$label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    r
-  }
-
   /** Per-batch materialization tier (VERDICT r4 next-round #3). Local
     * checkpoints are executor-resident: fast, but NOT fault-tolerant — on a
     * real cluster an executor loss mid-batch kills the job, and recompute
-    * is not an option here because the claim's post-zipWithIndex lineage is
-    * deliberately non-deterministic. With `cfg.reliableCheckpointDir` set,
-    * the same sites write RELIABLE checkpoints (HDFS/object store), so a
-    * long batch survives executor loss; results are identical either way
-    * (ReliableCheckpointSpec pins that).
+    * is not an option here because the pin's claim reads the pre-commit
+    * state, which a recompute after the commit would no longer see. With
+    * `cfg.reliableCheckpointDir` set, the same sites write RELIABLE
+    * checkpoints (HDFS/object store), so a long batch survives executor
+    * loss; results are identical either way (ReliableCheckpointSpec pins
+    * that).
     */
   private def materialize(df: DataFrame): DataFrame =
     if (cfg.reliableCheckpointDir.isDefined) df.checkpoint(true)
@@ -208,34 +214,8 @@ final class CrawlEngine(
       else includeP.isEmpty || includeP.exists(g => Globs.matches(g, url))
     }
 
-    // Adaptive mode reads the "browser" sub-crawler's view from optional
-    // rendered_body / rendered_images columns (null or absent = the page
-    // renders identically under both sub-crawlers).
-    val pagesDf = pages
-      .select(
-        col("url").as("p_url"),
-        col("status").as("p_status"),
-        col("redirect_to").as("p_redirect"),
-        col("body").as("p_body"),
-        col("image_ids").as("p_images"),
-        (if (pages.columns.contains("rendered_body")) col("rendered_body")
-         else lit(null).cast("string")).as("p_rbody"),
-        (if (pages.columns.contains("rendered_images")) col("rendered_images")
-         else lit(null).cast("array<string>")).as("p_rimages")
-      )
-      // hash-partitioned on the join key BEFORE the persist: every batch's
-      // synthetic-fetch join (and the redirect-target re-join) is keyed on
-      // p_url with shuffle.partitions partitions, so the cached layout
-      // satisfies the join's required distribution and the page table —
-      // the heavy side, bodies included — never re-exchanges (guide §2.4);
-      // only the batch side shuffles, once per pin action
-      .repartition(spark.sparkContext.defaultParallelism, col("p_url"))
-      // ... and sorted within partitions on the same key, so a sort-merge
-      // join's ordering requirement is ALSO satisfied straight from the
-      // cache (no per-action re-sort of the page bodies)
-      .sortWithinPartitions(col("p_url"))
-      .persist()
-    traceTop("pages-pin")(pagesDf.count())
+    val pagesDf = pinPages(spark, pages)
+    Trace.span("engine.pages-pin")(pagesDf.count())
 
     // --- seed enqueue (S1 + F7: robots filter before add) -------------------
     // Seeds are driver-provided (small) so the full Request row — method,
@@ -291,7 +271,7 @@ final class CrawlEngine(
         CrawlEngine.seedSchema)
       store.addBatch(seedDf, candBound = rows.size.toLong)
     }
-    traceTop("seed-enqueue")(enqueueSeeds(seeds))
+    Trace.span("engine.seed-enqueue")(enqueueSeeds(seeds))
 
     val crawlOrder = mutable.ArrayBuffer.empty[String]
     val handledTags = mutable.HashMap.empty[String, String]
@@ -413,13 +393,15 @@ final class CrawlEngine(
     // commit is the recovery point, metrics are telemetry)
     val metricsDir = s"${store.root}/metrics"
     val metricsBuf = mutable.ArrayBuffer.empty[(Int, Long, Long, Long, Long, Long, Long)]
-    def flushMetrics(): Unit = if (metricsBuf.nonEmpty) {
+    def flushMetrics(): Unit = {
       import spark.implicits._
-      metricsBuf.toSeq
-        .toDF("batch_id", "virtual_now_ms", "claimed", "terminal", "images", "wall_ms", "processed_total")
-        .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(metricsDir)
-      metricsBuf.clear()
+      if (metricsBuf.nonEmpty) {
+        metricsBuf.toSeq
+          .toDF("batch_id", "virtual_now_ms", "claimed", "terminal", "images", "wall_ms", "processed_total")
+          .coalesce(1)
+          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(metricsDir)
+        metricsBuf.clear()
+      }
       runStats.persist() // PERSIST_STATE cadence rides the metrics flush
       persistProxyState() // proxy tier/rotation state rides the same cadence
       events.emit(graft.events.Event.PersistState, batchIdx) // X6
@@ -451,7 +433,7 @@ final class CrawlEngine(
     //     in-flight ADDS can never jump the queue;
     //   - per-batch: no forefront row in the in-flight batch (covers
     //     resumed stores holding forefront rows from an earlier run, whose
-    //     RECLAIM would jump the queue) — checked on the pinned claim.
+    //     RECLAIM would jump the queue) — checked on the batch pin.
     // Politeness/autoscaling/rate caps still force the serial path (their
     // per-batch driver state feeds the next claim's arguments).
     val pipelined = !enforcePoliteness && batchSizer.isEmpty &&
@@ -487,47 +469,16 @@ final class CrawlEngine(
         d.select(col("host"),
           greatest(lit(1L), floor(lit(batchPeriodMs) / (col("delay") * 1000L))).cast("int").as("quota")))
 
-      // P3 Retry-After: per-host max header value on this batch's 429 rows
-      // (tiny aggregate — 429 rows are few by construction)
-      def retryAfterByHost(unioned: DataFrame): Map[String, Int] =
-        unioned
-          .filter(col("eff_status") === 429)
-          .groupBy(col("host"))
-          .agg(max(retryAfterUdf(col("url"), col("retry_count"))).as("ra"))
-          .collect()
-          .collect { case r if !r.isNullAt(1) && r.getInt(1) >= 0 => r.getString(0) -> r.getInt(1) }
-          .toMap
+      def trace[T](label: String)(f: => T): T = Trace.span(s"batch=$batchIdx $label")(f)
 
-      def trace[T](label: String)(f: => T): T = {
-        val t0 = System.nanoTime()
-        val r = f
-        if (sys.env.contains("GRAFT_TRACE"))
-          println(f"[trace] batch=$batchIdx $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        r
-      }
       // claim selection WITHOUT a commit: the whole batch commits once at the
       // end (an uncommitted batch replays deterministically on crash, which
-      // preserves exactly-once without the claim round-trip).
-      // localCheckpoint freezes the pick and cuts lineage for all downstream
-      // plans this batch.
-      // localCheckpoint is REQUIRED for correctness, not just speed: batch
-      // feeds frames evaluated both before and after commitBatch swaps the
-      // state; an un-pinned claimSet would re-select against the NEW state
-      // post-commit (phantom/lost robots-skip and redirect-fail rows).
-      // claimSet's top-k output is one sorted partition; in bench mode
-      // (no order-sensitive collects) spread it so the whole fetch/handle
-      // pipeline runs wide from the first operator — claim_rank already
-      // carries the order as data. Parity mode keeps the sorted layout
-      // (image-emission order is part of the oracle contract).
-      def freshClaim(): DataFrame = {
-        val picked = store.claimSet(budget, nowMs, hostQuota = quota, blockedHosts = blocked,
-          quotaTable = quotaTable)
-        val spread =
-          if (trackOrder) picked
-          else picked.repartition(spark.sparkContext.defaultParallelism)
-        trace("claim")(materialize(spread))
-      }
-      val batch = prefetched match {
+      // preserves exactly-once without the claim round-trip). The fresh
+      // claim is a lazy plan, evaluated once inside the batch pin below; a
+      // prefetched claim arrives already materialized.
+      def freshClaim(): DataFrame =
+        store.claimSet(budget, nowMs, hostQuota = quota, blockedHosts = blocked, quotaTable = quotaTable)
+      val claim = prefetched match {
         case Some(b) =>
           prefetched = None
           // a stale-empty prefetch must be confirmed against FRESH state
@@ -536,11 +487,245 @@ final class CrawlEngine(
           if (b.count() > 0) { prefetchHits += 1; b } else freshClaim()
         case None => freshClaim()
       }
-      val claimedCount = batch.count()
+
+      // --- session-request collision check (reference
+      // _basic_crawler.py:1673-1686): a request strictly bound to a
+      // session whose Session is no longer available in the pool fails
+      // terminally WITHOUT a fetch (RequestCollisionError -> no_retry).
+      // The bound-id set is tiny (only seeds can bind), so availability
+      // is resolved driver-side once per batch and pushed down as an
+      // isin literal — zero cost for unbound crawls.
+      // Session clock (ADVICE r3 #4): parity mode pins the session clock
+      // to 0L exactly like the oracle (sessions never age out), so long
+      // crawls can't drift engine-vs-oracle on age-based rotation; bench
+      // mode keeps the real virtual clock so maxAgeMs is honored.
+      val sessNow = if (trackOrder) 0L else nowMs
+      val unavailableBound: Set[String] =
+        if (boundSessionIds.isEmpty) Set.empty
+        else boundSessionIds.toSet.filter(id => !sessionPool.getById(id).exists(_.isUsable(sessNow)))
+      val collidedRow =
+        if (unavailableBound.isEmpty) lit(false)
+        else col("session_id").isNotNull && col("session_id").isInCollection(unavailableBound)
+
+      // --- adaptive delegation: predict + route BEFORE the fetch -------------
+      // (reference _adaptive_playwright_crawler.py:385-446). Scoring is a
+      // broadcast of the small model against a (key, url, label)
+      // projection of the batch; route/detect become claim columns.
+      val routedIn = cfg.adaptive match {
+        case Some(ac) =>
+          graft.ml.AdaptiveDelegation.routeColumns(ac, claim, "url", "label", "unique_key")
+        case None =>
+          claim
+            .withColumn("__rt", lit(null).cast("string"))
+            .withColumn("__dp", lit(null).cast("double"))
+            .withColumn("__detect", lit(false))
+            .withColumn("__route", lit(graft.ml.AdaptiveDelegation.RouteStatic))
+      }
+
+      // --- synthetic fetch: status join, then one redirect hop ---------------
+      // The first join reads only (url, redirect target) of the page table
+      // and spreads the batch over the join's partitions before any per-row
+      // UDF runs. Every claimed row stays in ONE linear plan and carries its
+      // class: a row the robots re-check (F6) or the collision check stops
+      // is never fetched (statusAtFn is only called for fetchable rows).
+      val joined = routedIn
+        .join(pagesDf.select(col("p_url"), col("p_redirect")), col("url") === col("p_url"), "left")
+      val withRobots =
+        if (!robotsJoinMode) joined.withColumn("robots_ok", robotsAllowedUdf(col("url")))
+        else // F6 via the robots-table join: rules move only for claim hosts
+          joined.join(robotsRt, col("host") === col("rb_host"), "left")
+            .withColumn("robots_ok",
+              robotsRulesUdf(col("url"), col("host"), col("rb_status"), col("rb_body")))
+            .drop("rb_host", "rb_status", "rb_body")
+      val fetchable = col("__class") === ClassFetched
+      val fetched = withRobots
+        .withColumn("__class",
+          when(!col("robots_ok"), lit(ClassRobotsSkip))
+            .when(collidedRow, lit(ClassCollided))
+            .otherwise(lit(ClassFetched)))
+        .drop("robots_ok")
+        .withColumn("eff_status",
+          when(fetchable,
+            when(col("p_url").isNull, lit(404)).otherwise(statusUdf(col("url"), col("retry_count")))))
+      // The hop re-checks the strategy against the original url (F8), and
+      // the second join loads the body of the page actually served: the
+      // redirect target, else the page itself — never a null key, which
+      // would send every non-redirect row to one shuffle partition. The
+      // fixture guarantees redirect targets are terminal.
+      val isRedirect = fetchable && col("eff_status") === 301
+      val hopped = fetched
+        .withColumn("loaded_url", when(isRedirect, col("p_redirect")).otherwise(col("url")))
+        .withColumn("__class",
+          when(isRedirect &&
+            !UrlFunctions.strategyAllows(col("loaded_url"), lit(cfg.strategy), col("url")),
+            lit(ClassRedirectFail)).otherwise(col("__class")))
+        .drop("p_url", "p_redirect")
+        .join(pagesDf.select(col("p_url").as("t_url"), col("p_body"), col("p_images"),
+          col("p_rbody"), col("p_rimages")), col("loaded_url") === col("t_url"), "left")
+        .withColumn("eff_status",
+          when(isRedirect, statusUdf(col("loaded_url"), col("retry_count"))).otherwise(col("eff_status")))
+        .drop("t_url")
+
+      // Digest the body BEFORE the pin: the checkpoint then materializes
+      // the extracted link list + base URL + blocked flag (~100 B/row)
+      // instead of the raw page body (~KBs/row), and the regexp generators
+      // run exactly once per fetched page instead of once per downstream
+      // plan. Links are only extracted from 200s — failed fetches never
+      // enter the handler.
+      val blockedUdf = udf { (st: Int, body: String) =>
+        graft.canon.Blocked.blockedReason(st, body).isDefined
+      }
+      // --- adaptive sub-crawler selection (reference :400-446) ---------------
+      // A checker-failed static run is a tracked misprediction that falls
+      // through to the browser sub-crawler; detection rows compare the two
+      // sub-runs' pushed data (push-data-only comparator); the ROUTED
+      // body/images drive everything downstream — blocked detection, link
+      // extraction, image emission — so a browser-routed page crawls its
+      // rendered DOM.
+      def applyRoute(df: DataFrame): DataFrame = cfg.adaptive match {
+        case None =>
+          df.withColumn("__mispred", lit(false))
+            .withColumn("__detection", lit(null).cast("string"))
+            .drop("p_rbody", "p_rimages")
+        case Some(ac) =>
+          val checkerFail = ac.resultChecker match {
+            case Some(ck) =>
+              val ckUdf = udf { (st: Int, imgs: Seq[String]) =>
+                !ck(st, Option(imgs).getOrElse(Seq.empty))
+              }
+              fetchable && col("__route") === AdaptiveDelegation.RouteStatic &&
+                ckUdf(col("eff_status"), col("p_images"))
+            case None => lit(false)
+          }
+          df.withColumn("__mispred", checkerFail)
+            .withColumn("__route",
+              when(col("__mispred"), lit(AdaptiveDelegation.RouteBrowser))
+                .otherwise(col("__route")))
+            .withColumn("__detection",
+              when(col("__detect") && col("eff_status") === 200,
+                AdaptiveDelegation.detectionCol(col("p_images"), col("p_rimages")))
+                .otherwise(lit(null).cast("string")))
+            .withColumn("p_body",
+              when(col("__route") === AdaptiveDelegation.RouteBrowser,
+                coalesce(col("p_rbody"), col("p_body"))).otherwise(col("p_body")))
+            .withColumn("p_images",
+              when(col("__route") === AdaptiveDelegation.RouteBrowser,
+                coalesce(col("p_rimages"), col("p_images"))).otherwise(col("p_images")))
+            .drop("p_rbody", "p_rimages")
+      }
+      def digestBody(df: DataFrame): DataFrame = df
+        .withColumn("is_blocked",
+          // R7: a timed-out dispatch is a timeout error, never a session
+          // block (the handler never completed; reference raises the
+          // TimeoutError before any blocked-content check can run)
+          if (cfg.detectBlocked)
+            fetchable && col("eff_status") =!= CrawlEngine.StatusHandlerTimeout &&
+              blockedUdf(col("eff_status"), col("p_body"))
+          else lit(false))
+        .withColumn("base_href",
+          when(col("eff_status") === 200, regexp_extract(col("p_body"), BaseHrefPattern, 1))
+            .otherwise(lit("")))
+        .withColumn("base_url",
+          when(length(col("base_href")) > 0, col("base_href")).otherwise(col("loaded_url")))
+        .withColumn("links",
+          when(fetchable && col("eff_status") === 200 &&
+            // page-level robots nofollow: the whole page contributes no
+            // links (opt-in; shared pattern with the oracle's check)
+            (if (cfg.respectNofollowMeta)
+              !col("p_body").rlike(graft.oracle.CrawlOracle.NofollowMetaPattern)
+            else lit(true)),
+            // selector-parametrized generator (reference
+            // _abstract_http_crawler.py:198-219): the (tag, attribute)
+            // pair is user configuration, default <a href>
+            regexp_extract_all(col("p_body"), lit(cfg.linkSelector.pattern), lit(1)))
+            .otherwise(array().cast("array<string>")))
+        .drop("base_href")
+      // THE batch pin: every claimed row with its class, evaluated ONCE
+      // (claim, robots gate, collision check, both fetch joins, digest).
+      // localCheckpoint also truncates lineage, so every downstream plan
+      // this batch (outcome aggregate, enqueue pipeline, commit) is planned
+      // over a flat in-memory scan. It is REQUIRED for correctness, not
+      // just speed: those plans run before and after commitBatch swaps the
+      // state, and an unpinned claim would re-select against the NEW state.
+      val pin = trace("pin")(materialize(digestBody(applyRoute(hopped)).select(resultCols: _*)))
+      val fetchedRows = pin.filter(fetchable)
+
+      // --- classification (F12 / R1) -----------------------------------------
+      // retryable = 429 or any 5xx; EVERYTHING else non-200 is a terminal
+      // client error (catch-all — an unexpected status from statusAtFn must
+      // never leave the row Pending to be re-claimed forever).
+      // Retry eligibility honors the per-request no_retry flag and
+      // max_retries override before the crawl default
+      // (_basic_crawler.py:982-997).
+      // F11 + R4: blocked content is the SessionError path — rotate the
+      // session and retry WITHOUT consuming a retry, up to
+      // maxSessionRotations (reference _basic_crawler.py:990-991)
+      val isBlockedRow = col("is_blocked")
+      val isRetryableStatus = col("eff_status") === 429 || col("eff_status") >= 500 ||
+        col("eff_status") === CrawlEngine.StatusHandlerTimeout // R7: timeout is retryable
+      val retryAllowed =
+        !col("no_retry") && col("retry_count") < coalesce(col("max_retries"), lit(cfg.maxRetries))
+
+      // --- per-row outcome over the pin ----------------------------------------
+      // outcome codes: 0=ok, 1=fail404, 2=retry, 3=exhausted/rotation-exhausted,
+      // 4=blocked-rotate, 10=redir_fail, 11=robots_skip, 12=session-collision
+      val disposition = pin
+        .select(
+          col("claim_rank"),
+          col("url"),
+          col("unique_key"),
+          col("host"),
+          when(!fetchable, col("__class"))
+            .when(isBlockedRow && col("rotation_count") < cfg.maxSessionRotations, 4)
+            .when(isBlockedRow, 3)
+            .when(col("eff_status") === 200, 0)
+            .when(!isRetryableStatus, 1)
+            .when(retryAllowed, 2)
+            .otherwise(3)
+            .as("outcome"),
+          when(fetchable && col("eff_status") === 200 && !isBlockedRow,
+            coalesce(size(col("p_images")), lit(0)))
+            .otherwise(0)
+            .as("n_images"),
+          (fetchable && col("eff_status") === 429).as("is429"),
+          col("label").as("r_label"),
+          col("session_id").as("r_session"),
+          col("retry_count").as("r_retry"),
+          col("last_proxy_tier").as("r_last_tier")
+        )
+
+      // --- ONE bookkeeping read of the pin, before the commit ------------------
+      // (read BEFORE the commit mutates state — see the pin note). Parity
+      // mode collects every row in claim order; bench mode folds the rows
+      // into one aggregate by (outcome, retry count, and host when
+      // politeness is on). Either gives the claimed count, the outcome and
+      // image counters, and the politeness inputs.
+      val dispositionRows: Array[org.apache.spark.sql.Row] =
+        if (!trackOrder) Array.empty
+        else trace("outcomes")(disposition.collect().sortBy(_.getInt(0)))
+      val aggRows: Array[org.apache.spark.sql.Row] =
+        if (trackOrder) Array.empty
+        else trace("outcomes") {
+          val polite =
+            if (!enforcePoliteness) Nil
+            else Seq(
+              sum(when(col("is429"), 1L).otherwise(0L)).as("n429"),
+              max(when(col("is429"), retryAfterUdf(col("url"), col("r_retry")))).as("ra"))
+          disposition
+            .groupBy((Seq(col("outcome"), col("r_retry")) ++
+              (if (enforcePoliteness) Seq(col("host")) else Nil)): _*)
+            .agg(count(lit(1)).as("cnt"), (sum(col("n_images")).as("imgs") +: polite): _*)
+            .collect()
+        }
+      val claimedCount =
+        if (trackOrder) dispositionRows.length.toLong else aggRows.iterator.map(_.getAs[Long]("cnt")).sum
 
       if (claimedCount == 0) {
-        if (enforcePoliteness && !store.isFinished(nowMs) && store.pendingCount(nowMs) > 0) {
-          batchIdx += 1 // all throttled: advance the virtual clock (P2 sleep)
+        pin.unpersist(false)
+        // all throttled (pending rows remain): advance the virtual clock
+        // (P2 sleep); a non-empty pending set already implies !isFinished
+        if (enforcePoliteness && store.pendingCount(nowMs) > 0) {
+          batchIdx += 1
         } else if (cfg.keepAlive) {
           // X5 keep_alive: idle doesn't stop the crawl; the idle hook may
           // inject new work (reference test_basic_crawler.py:1681+) or stop it
@@ -558,182 +743,6 @@ final class CrawlEngine(
         } else done = true
       } else {
         val processedBefore = processedTotal
-        // --- robots re-check at fetch time (F6) ------------------------------
-        val withRobots =
-          if (!robotsJoinMode) batch.withColumn("robots_ok", robotsAllowedUdf(col("url")))
-          else // F6 via the robots-table join: rules move only for claim hosts
-            batch.join(robotsRt, batch("host") === col("rb_host"), "left")
-              .withColumn("robots_ok",
-                robotsRulesUdf(col("url"), col("host"), col("rb_status"), col("rb_body")))
-              .drop("rb_host", "rb_status", "rb_body")
-        val robotsSkipped = withRobots.filter(!col("robots_ok"))
-        val allowed0 = withRobots.filter(col("robots_ok"))
-
-        // --- session-request collision check (reference
-        // _basic_crawler.py:1673-1686): a request strictly bound to a
-        // session whose Session is no longer available in the pool fails
-        // terminally WITHOUT a fetch (RequestCollisionError -> no_retry).
-        // The bound-id set is tiny (only seeds can bind), so availability
-        // is resolved driver-side once per batch and pushed down as an
-        // isin literal — zero cost for unbound crawls.
-        // Session clock (ADVICE r3 #4): parity mode pins the session clock
-        // to 0L exactly like the oracle (sessions never age out), so long
-        // crawls can't drift engine-vs-oracle on age-based rotation; bench
-        // mode keeps the real virtual clock so maxAgeMs is honored.
-        val sessNow = if (trackOrder) 0L else nowMs
-        val unavailableBound: Set[String] =
-          if (boundSessionIds.isEmpty) Set.empty
-          else boundSessionIds.toSet.filter(id => !sessionPool.getById(id).exists(_.isUsable(sessNow)))
-        val (collided, allowed) =
-          if (unavailableBound.isEmpty)
-            // limit(0) optimizes to an empty LocalRelation — the common
-            // unbound-crawl case must not pay a full batch-scan union arm
-            // in every commit and disposition just to contribute 0 rows
-            (allowed0.limit(0), allowed0)
-          else
-            (allowed0.filter(col("session_id").isInCollection(unavailableBound)),
-             allowed0.filter(col("session_id").isNull || !col("session_id").isInCollection(unavailableBound)))
-
-        // --- adaptive delegation: predict + route BEFORE the fetch -----------
-        // (reference _adaptive_playwright_crawler.py:385-446). Scoring is a
-        // broadcast of the small model against a (key, url, label)
-        // projection of the batch; route/detect become claim columns.
-        val allowedR = cfg.adaptive match {
-          case Some(ac) =>
-            graft.ml.AdaptiveDelegation.routeColumns(ac, allowed, "url", "label", "unique_key")
-          case None =>
-            allowed
-              .withColumn("__rt", lit(null).cast("string"))
-              .withColumn("__dp", lit(null).cast("double"))
-              .withColumn("__detect", lit(false))
-              .withColumn("__route", lit(graft.ml.AdaptiveDelegation.RouteStatic))
-        }
-
-        // --- synthetic fetch: join page table; resolve one redirect hop ------
-        val fetched = allowedR
-          .join(pagesDf, allowedR("url") === pagesDf("p_url"), "left")
-          .withColumn(
-            "eff_status",
-            when(col("p_url").isNull, lit(404))
-              .otherwise(statusUdf(col("url"), col("retry_count")))
-          )
-        val redirected = fetched.filter(col("eff_status") === 301)
-        val direct = fetched.filter(col("eff_status") =!= 301)
-
-        // redirect hop: re-check strategy vs original url (F8), join target page
-        val redirResolved = redirected
-          .withColumn("loaded_url", col("p_redirect"))
-          .withColumn(
-            "strategy_ok",
-            UrlFunctions.strategyAllows(col("loaded_url"), lit(cfg.strategy), col("url"))
-          )
-        // pinned: redirect-strategy failures are NOT part of the `unioned`
-        // checkpoint (only redirOk is), so an unpinned frame would re-run
-        // the whole fetch join (a pagesDf shuffle) inside EVERY consumer —
-        // the commit's terminal arm and the disposition both read it
-        val redirFailed = trace("redir-pin")(
-          materialize(redirResolved.filter(!col("strategy_ok"))))
-        val p2 = pagesDf.select(
-          col("p_url").as("t_url"),
-          col("p_body").as("t_body"),
-          col("p_images").as("t_images"),
-          col("p_rbody").as("t_rbody"),
-          col("p_rimages").as("t_rimages")
-        )
-        val redirOk = redirResolved
-          .filter(col("strategy_ok"))
-          .drop("p_url", "p_status", "p_redirect", "p_body", "p_images", "p_rbody", "p_rimages")
-          .join(p2, col("loaded_url") === col("t_url"), "left")
-          .withColumn("eff_status", statusUdf(col("loaded_url"), col("retry_count")))
-          .withColumn("p_body", col("t_body"))
-          .withColumn("p_images", col("t_images"))
-          .withColumn("p_rbody", col("t_rbody"))
-          .withColumn("p_rimages", col("t_rimages"))
-          .drop("t_url", "t_body", "t_images", "t_rbody", "t_rimages")
-
-        val directLoaded = direct.withColumn("loaded_url", col("url"))
-        // Digest the body BEFORE the pin: the checkpoint then materializes
-        // the extracted link list + base URL + blocked flag (~100 B/row)
-        // instead of the raw page body (~KBs/row), and the regexp generators
-        // run exactly once per fetched page instead of once per downstream
-        // plan. Links are only extracted from 200s — failed fetches never
-        // enter the handler.
-        val blockedUdf = udf { (st: Int, body: String) =>
-          graft.canon.Blocked.blockedReason(st, body).isDefined
-        }
-        // --- adaptive sub-crawler selection (reference :400-446) -------------
-        // A checker-failed static run is a tracked misprediction that falls
-        // through to the browser sub-crawler; detection rows compare the two
-        // sub-runs' pushed data (push-data-only comparator); the ROUTED
-        // body/images drive everything downstream — blocked detection, link
-        // extraction, image emission — so a browser-routed page crawls its
-        // rendered DOM.
-        def applyRoute(df: DataFrame): DataFrame = cfg.adaptive match {
-          case None =>
-            df.withColumn("__mispred", lit(false))
-              .withColumn("__detection", lit(null).cast("string"))
-              .drop("p_rbody", "p_rimages")
-          case Some(ac) =>
-            val checkerFail = ac.resultChecker match {
-              case Some(ck) =>
-                val ckUdf = udf { (st: Int, imgs: Seq[String]) =>
-                  !ck(st, Option(imgs).getOrElse(Seq.empty))
-                }
-                col("__route") === AdaptiveDelegation.RouteStatic &&
-                  ckUdf(col("eff_status"), col("p_images"))
-              case None => lit(false)
-            }
-            df.withColumn("__mispred", checkerFail)
-              .withColumn("__route",
-                when(col("__mispred"), lit(AdaptiveDelegation.RouteBrowser))
-                  .otherwise(col("__route")))
-              .withColumn("__detection",
-                when(col("__detect") && col("eff_status") === 200,
-                  AdaptiveDelegation.detectionCol(col("p_images"), col("p_rimages")))
-                  .otherwise(lit(null).cast("string")))
-              .withColumn("p_body",
-                when(col("__route") === AdaptiveDelegation.RouteBrowser,
-                  coalesce(col("p_rbody"), col("p_body"))).otherwise(col("p_body")))
-              .withColumn("p_images",
-                when(col("__route") === AdaptiveDelegation.RouteBrowser,
-                  coalesce(col("p_rimages"), col("p_images"))).otherwise(col("p_images")))
-              .drop("p_rbody", "p_rimages")
-        }
-        def digestBody(df: DataFrame): DataFrame = df
-          .withColumn("is_blocked",
-            // R7: a timed-out dispatch is a timeout error, never a session
-            // block (the handler never completed; reference raises the
-            // TimeoutError before any blocked-content check can run)
-            if (cfg.detectBlocked)
-              col("eff_status") =!= CrawlEngine.StatusHandlerTimeout &&
-                blockedUdf(col("eff_status"), col("p_body"))
-            else lit(false))
-          .withColumn("base_href",
-            when(col("eff_status") === 200, regexp_extract(col("p_body"), BaseHrefPattern, 1))
-              .otherwise(lit("")))
-          .withColumn("base_url",
-            when(length(col("base_href")) > 0, col("base_href")).otherwise(col("loaded_url")))
-          .withColumn("links",
-            when(col("eff_status") === 200 &&
-              // page-level robots nofollow: the whole page contributes no
-              // links (opt-in; shared pattern with the oracle's check)
-              (if (cfg.respectNofollowMeta)
-                !col("p_body").rlike(graft.oracle.CrawlOracle.NofollowMetaPattern)
-              else lit(true)),
-              // selector-parametrized generator (reference
-              // _abstract_http_crawler.py:198-219): the (tag, attribute)
-              // pair is user configuration, default <a href>
-              regexp_extract_all(col("p_body"), lit(cfg.linkSelector.pattern), lit(1)))
-              .otherwise(array().cast("array<string>")))
-          .drop("base_href")
-        // localCheckpoint: materialize AND truncate lineage, so every
-        // downstream plan this batch (enqueue pipeline, commits, disposition)
-        // is planned over a flat in-memory scan instead of re-carrying the
-        // whole fetch-join tree through Catalyst each time — per-batch
-        // planning time is a serial driver cost that caps scaling.
-        val unioned = trace("fetch-pin")(materialize(digestBody(applyRoute(directLoaded))
-          .select(resultCols: _*)
-          .unionByName(digestBody(applyRoute(redirOk)).select(resultCols: _*))))
 
         // --- adaptive feedback (reference :429-446) --------------------------
         // Detection rows feed the predictor IN CLAIM ORDER (the reference's
@@ -742,7 +751,7 @@ final class CrawlEngine(
         // decaying detection probability — reach the driver. Reads the
         // checkpointed frame, so nothing recomputes.
         cfg.adaptive.foreach { ac =>
-          val agg = unioned.agg(
+          val agg = fetchedRows.agg(
             sum(when(col("__route") === AdaptiveDelegation.RouteStatic || col("__mispred"), 1L)
               .otherwise(0L)),
             sum(when(col("__route") === AdaptiveDelegation.RouteBrowser, 1L).otherwise(0L)),
@@ -750,7 +759,7 @@ final class CrawlEngine(
           httpOnlyRunsAcc += (if (agg.isNullAt(0)) 0L else agg.getLong(0))
           browserRunsAcc += (if (agg.isNullAt(1)) 0L else agg.getLong(1))
           mispredictionsAcc += (if (agg.isNullAt(2)) 0L else agg.getLong(2))
-          unioned.filter(col("__detection").isNotNull && !col("is_blocked"))
+          fetchedRows.filter(col("__detection").isNotNull && !col("is_blocked"))
             .select(col("claim_rank"), col("url"), col("label"), col("__detection"))
             .collect()
             .sortBy(_.getInt(0))
@@ -760,32 +769,11 @@ final class CrawlEngine(
               adaptiveDetectionLog(url) = r.getString(3)
             }
         }
-
-        // --- classification (F12 / R1) ---------------------------------------
-        // retryable = 429 or any 5xx; EVERYTHING else non-200 is a terminal
-        // client error (catch-all — an unexpected status from statusAtFn must
-        // never leave the row Pending to be re-claimed forever).
-        // Retry eligibility honors the per-request no_retry flag and
-        // max_retries override before the crawl default
-        // (_basic_crawler.py:982-997).
-        // F11 + R4: blocked content is the SessionError path — rotate the
-        // session and retry WITHOUT consuming a retry, up to
-        // maxSessionRotations (reference _basic_crawler.py:990-991)
-        val isBlockedRow = col("is_blocked")
-        val blockedRows = unioned.filter(isBlockedRow)
+        val blockedRows = fetchedRows.filter(isBlockedRow)
         val canRotate = blockedRows.filter(col("rotation_count") < cfg.maxSessionRotations)
-        val rotateExhausted = blockedRows.filter(col("rotation_count") >= cfg.maxSessionRotations)
-        val classified = unioned.filter(!isBlockedRow)
-
-        val isRetryableStatus = col("eff_status") === 429 || col("eff_status") >= 500 ||
-          col("eff_status") === CrawlEngine.StatusHandlerTimeout // R7: timeout is retryable
-        val retryAllowed =
-          !col("no_retry") && col("retry_count") < coalesce(col("max_retries"), lit(cfg.maxRetries))
+        val classified = fetchedRows.filter(!isBlockedRow)
         val ok200 = classified.filter(col("eff_status") === 200)
-        val fail404 = classified.filter(col("eff_status") =!= 200 && !isRetryableStatus)
-        val retryable = classified.filter(isRetryableStatus)
-        val canRetry0 = retryable.filter(retryAllowed)
-        val exhausted = retryable.filter(!retryAllowed)
+        val canRetry0 = classified.filter(isRetryableStatus).filter(retryAllowed)
         // error handler: may replace url/label before the retry (counters
         // preserved, unique_key kept — prevents retry loops via re-dedup)
         val canRetry = cfg.errorHandler match {
@@ -813,7 +801,7 @@ final class CrawlEngine(
         // the reference's test contract. Failing rows are few by
         // construction; the body rejoin touches only them.
         if (cfg.captureErrorSnapshots) {
-          val failing = unioned.filter(col("eff_status") =!= 200 || col("is_blocked"))
+          val failing = fetchedRows.filter(col("eff_status") =!= 200 || col("is_blocked"))
             .select(col("url"), col("loaded_url"), col("eff_status"), col("is_blocked"))
           // snapshot names dedupe on (error location, message prefix) which
           // is a pure function of (blocked?, status) — so sample ONE
@@ -853,7 +841,6 @@ final class CrawlEngine(
           }
           if (snapRows.nonEmpty) errorSnapshotter.persist()
         }
-
         // --- router dispatch (reference router.py:113-121) --------------------
         // handler resolution is a tiny per-label lookup riding as columns on
         // the fetched rows; exact-match, default fallback, error when
@@ -957,96 +944,34 @@ final class CrawlEngine(
           .filter(col("h_emit"))
           .select(col("unique_key"), explode_outer(col("p_images")).as("image_id"))
           .filter(col("image_id").isNotNull)
-
         // --- ONE atomic commit for the whole batch ------------------------------
         // terminal rows carry full event columns (they came from claimSet),
-        // so the store needs no join against in-progress state
-        def term(df: DataFrame, ok: Boolean, state: Int): DataFrame =
-          df.select(FrontierStore.eventCols: _*)
-            .withColumn("r_ok", lit(ok)).withColumn("r_state", lit(state))
-        // ONE pass over the pinned batch for the four fetched terminal
-        // classes (ok / client-error / retry-exhausted / rotation-
-        // exhausted): each used to be its own filter arm of the commit
-        // union, so the write stage re-scanned the checkpointed batch once
-        // per class (449-task write stages, event-log measured; the class
-        // only decides r_ok/r_state, which fold into computed columns —
-        // the same single-pass shape `disposition` below already uses).
-        // All terminal rows share one event_seq, so arm order never
-        // mattered. redirFailed/robotsSkipped/collided come from frames
-        // OUTSIDE `unioned` and stay as their own (pinned or empty) arms.
-        val termFetched = unioned
-          .filter(
-            (!isBlockedRow &&
-              (col("eff_status") === 200 || !isRetryableStatus || !retryAllowed)) ||
+        // so the store needs no join against in-progress state. ONE pass
+        // over the pin for every terminal class: the class only decides
+        // r_ok/r_state, which fold into computed columns (all terminal rows
+        // share one event_seq, so their order never mattered).
+        val terminal = pin
+          .filter(!fetchable ||
+            (!isBlockedRow && (col("eff_status") === 200 || !isRetryableStatus || !retryAllowed)) ||
             (isBlockedRow && col("rotation_count") >= cfg.maxSessionRotations))
-          .withColumn("__r_ok", !col("is_blocked") && col("eff_status") === 200)
-          .withColumn("__r_state",
-            when(col("__r_ok"), lit(RequestState.Done)).otherwise(lit(RequestState.Error)))
-        val terminal = termFetched
-          .select(
-            (FrontierStore.eventCols :+ col("__r_ok").as("r_ok") :+ col("__r_state").as("r_state")): _*)
-          .unionByName(term(redirFailed, ok = false, RequestState.Skipped))
-          .unionByName(term(robotsSkipped, ok = false, RequestState.Skipped))
-          .unionByName(term(collided, ok = false, RequestState.Error))
+          .withColumn("r_ok", fetchable && !isBlockedRow && col("eff_status") === 200)
+          .withColumn("r_state",
+            when(col("r_ok"), lit(RequestState.Done))
+              .when(fetchable || col("__class") === ClassCollided, lit(RequestState.Error))
+              .otherwise(lit(RequestState.Skipped)))
+          .select((FrontierStore.eventCols :+ col("r_ok") :+ col("r_state")): _*)
 
         // failed-request handler: one driver hop over ONLY the terminally-
         // failed rows of this batch (few by construction), in claim order —
         // mirroring the reference's sequential callback
         // (_basic_crawler.py:1206-1230)
         cfg.failedRequestHandler.foreach { h =>
-          fail404.select(col("claim_rank"), col("url"), col("label"))
-            .unionByName(exhausted.select(col("claim_rank"), col("url"), col("label")))
-            .unionByName(rotateExhausted.select(col("claim_rank"), col("url"), col("label")))
-            .unionByName(collided.select(col("claim_rank"), col("url"), col("label")))
-            .collect()
-            .sortBy(_.getInt(0))
-            .foreach(r => h(RequestOptions(r.getString(1), Option(r.getString(2)))))
+          val failedRows =
+            if (trackOrder) dispositionRows.filter(r => Set(1, 3, 12).contains(r.getInt(4)))
+            else disposition.filter(col("outcome").isin(1, 3, 12)).collect().sortBy(_.getInt(0))
+          failedRows.foreach(r => h(RequestOptions(r.getString(1), Option(r.getString(7)))))
         }
 
-        // --- driver-side bookkeeping: ONE collect for the whole batch ----------
-        // (collected BEFORE the commit mutates state — see batch checkpoint note)
-        // outcome codes: 0=ok, 1=fail404, 2=retry, 3=exhausted/rotation-exhausted,
-        // 4=blocked-rotate, 10=redir_fail, 11=robots_skip, 12=session-collision
-        val disposition = unioned
-          .select(
-            col("claim_rank"),
-            col("url"),
-            col("unique_key"),
-            col("host"),
-            when(isBlockedRow && col("rotation_count") < cfg.maxSessionRotations, 4)
-              .when(isBlockedRow, 3)
-              .when(col("eff_status") === 200, 0)
-              .when(!isRetryableStatus, 1)
-              .when(retryAllowed, 2)
-              .otherwise(3)
-              .as("outcome"),
-            when(col("eff_status") === 200 && !isBlockedRow, coalesce(size(col("p_images")), lit(0)))
-              .otherwise(0)
-              .as("n_images"),
-            (col("eff_status") === 429).as("is429"),
-            col("label").as("r_label"),
-            col("session_id").as("r_session"),
-            col("retry_count").as("r_retry"),
-            col("last_proxy_tier").as("r_last_tier")
-          )
-          .unionByName(
-            redirFailed.select(col("claim_rank"), col("url"), col("unique_key"), col("host"),
-              lit(10).as("outcome"), lit(0).as("n_images"), lit(false).as("is429"),
-              col("label").as("r_label"), col("session_id").as("r_session"),
-              col("retry_count").as("r_retry"), col("last_proxy_tier").as("r_last_tier"))
-          )
-          .unionByName(
-            robotsSkipped.select(col("claim_rank"), col("url"), col("unique_key"), col("host"),
-              lit(11).as("outcome"), lit(0).as("n_images"), lit(false).as("is429"),
-              col("label").as("r_label"), col("session_id").as("r_session"),
-              col("retry_count").as("r_retry"), col("last_proxy_tier").as("r_last_tier"))
-          )
-          .unionByName(
-            collided.select(col("claim_rank"), col("url"), col("unique_key"), col("host"),
-              lit(12).as("outcome"), lit(0).as("n_images"), lit(false).as("is429"),
-              col("label").as("r_label"), col("session_id").as("r_session"),
-              col("retry_count").as("r_retry"), col("last_proxy_tier").as("r_last_tier"))
-          )
         // --- bench-mode tier fold (VERDICT r4 #5) -----------------------------
         // Per-host tier assignment as DATA: this batch's dispatches join the
         // per-host tier state table and fold per host partition with the
@@ -1085,7 +1010,7 @@ final class CrawlEngine(
         // ONE pass over the pinned batch for the two reclaim classes
         // (retry / session-rotate): the class only decides which counter
         // increments, so it folds into conditional columns instead of two
-        // full filter arms (same single-pass rationale as `termFetched`).
+        // full filter arms (same single-pass rationale as `terminal`).
         // A configured error handler rewrites retry URLs through its UDF,
         // so that (rare, off in bench and parity defaults) case keeps the
         // two-arm shape.
@@ -1098,7 +1023,7 @@ final class CrawlEngine(
                   .withColumn("rotation_count", col("rotation_count") + 1))
           else
             wrap(
-              unioned.filter(
+              fetchedRows.filter(
                 (isBlockedRow && col("rotation_count") < cfg.maxSessionRotations) ||
                 (!isBlockedRow && isRetryableStatus && retryAllowed)))
               .withColumn("retry_count",
@@ -1106,10 +1031,6 @@ final class CrawlEngine(
               .withColumn("rotation_count",
                 when(col("is_blocked"), col("rotation_count") + 1).otherwise(col("rotation_count")))
               .select(FrontierStore.eventCols: _*)
-
-        // the disposition collect and the commit both read only PINNED frames
-        // (batch + unioned are checkpointed) — run them concurrently so the
-        // driver-side decode overlaps the commit's executor work
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
@@ -1135,17 +1056,16 @@ final class CrawlEngine(
             val deepEnough = store.pendingEstimate - claimedCount >= nextBudget
             // strict-ordering per-batch gate: an in-flight forefront row's
             // reclaim would jump the queue, which the snapshot can't see —
-            // cheap take(1) scan on the PINNED claim; only resumed stores
-            // with pre-existing forefront rows ever pay a fallback here
+            // cheap take(1) scan on the pin; only resumed stores with
+            // pre-existing forefront rows ever pay a fallback here
             val noForefrontInFlight =
-              !trackOrder || batch.filter(col("forefront")).isEmpty
-            if (sys.env.contains("GRAFT_TRACE"))
-              println(s"[trace] batch=$batchIdx prefetch-gate nextBudget=$nextBudget " +
-                s"pending=${store.pendingEstimate} claimed=$claimedCount deep=$deepEnough noFf=$noForefrontInFlight")
+              !trackOrder || pin.filter(col("forefront")).isEmpty
+            Trace.line(s"batch=$batchIdx prefetch-gate nextBudget=$nextBudget " +
+              s"pending=${store.pendingEstimate} claimed=$claimedCount deep=$deepEnough noFf=$noForefrontInFlight")
             if (nextBudget <= 0 || !deepEnough || !noForefrontInFlight) None
             else {
               val plan = store.claimPlan(nextBudget, nowMs + batchPeriodMs,
-                excludeKeys = Some(batch.select(col("unique_key"))),
+                excludeKeys = Some(pin.select(col("unique_key"))),
                 excludePad = claimedCount.toInt)
               val par = spark.sparkContext.defaultParallelism
               Some(Future {
@@ -1156,16 +1076,19 @@ final class CrawlEngine(
               })
             }
           }
+        trace("commit")(store.commitBatch(
+          candidates,
+          terminal,
+          reclaimEvents(withAssignedTier)
+        ))
+        // politeness inputs of this batch: claimed rows and 429s per host,
+        // and the largest Retry-After header (P3) per host
+        val claimedPerHost = mutable.HashMap.empty[String, Long].withDefaultValue(0L)
+        val got429 = mutable.HashMap.empty[String, Long].withDefaultValue(0L)
+        val retryAfter = mutable.HashMap.empty[String, Int]
+        def noteRetryAfter(host: String, secs: Int): Unit =
+          if (secs >= 0) retryAfter(host) = math.max(secs, retryAfter.getOrElse(host, secs))
         if (trackOrder) {
-          val dispositionF = Future(disposition.collect().sortBy(_.getInt(0)))
-          trace("commit-results")(store.commitBatch(
-            candidates,
-            terminal,
-            reclaimEvents(identity)
-          ))
-          val dispositionRows = trace("disposition")(Await.result(dispositionF, Duration.Inf))
-          var images429 = Map.empty[String, Long]
-          var claimedPerHost = Map.empty[String, Long]
           dispositionRows.foreach { r =>
             val url = r.getString(1)
             val key = r.getString(2)
@@ -1232,8 +1155,11 @@ final class CrawlEngine(
             if (outcome == 0 || outcome == 1 || outcome == 3 || outcome == 10 || outcome == 12)
               lastProxyTierByKey.remove(key)
             if (enforcePoliteness) {
-              claimedPerHost = claimedPerHost.updated(host, claimedPerHost.getOrElse(host, 0L) + 1)
-              if (r.getBoolean(6)) images429 = images429.updated(host, images429.getOrElse(host, 0L) + 1)
+              claimedPerHost(host) += 1
+              if (r.getBoolean(6)) {
+                got429(host) += 1
+                noteRetryAfter(host, raFn(url, r.getInt(9)).getOrElse(-1))
+              }
             }
           }
           // R5 abort_on_error: any terminal failure in this (drained) batch
@@ -1247,31 +1173,23 @@ final class CrawlEngine(
             emittedImages ++= images.select(col("image_id")).collect().map(_.getString(0))
           else
             emittedImageCount += dispositionRows.iterator.map(_.getInt(5).toLong).sum
-          if (enforcePoliteness)
-            throttle.update(nowMs, claimedPerHost, images429, retryAfterByHost(unioned))
         } else {
-          // bench path: six aggregate rows instead of an O(batch) collect,
-          // overlapped with the commit
-          val aggF = Future(
-            disposition.groupBy(col("outcome"), col("r_retry"))
-              .agg(count(lit(1)).as("cnt"), sum(col("n_images")).as("imgs"))
-              .collect())
-          trace("commit-results")(store.commitBatch(
-            candidates,
-            terminal,
-            reclaimEvents(withAssignedTier)
-          ))
-          val aggRows = trace("disposition")(Await.result(aggF, Duration.Inf))
           aggRows.foreach { r =>
             val outcome = r.getInt(0)
             val retry = r.getInt(1)
-            val cnt = r.getLong(2)
+            val cnt = r.getAs[Long]("cnt")
             if (outcome == 0 || outcome == 1 || outcome == 3 || outcome == 10 || outcome == 12)
               processedTotal += cnt
             if (outcome == 0) runStats.recordTerminal(finished = true, retry, cnt)
             else if (outcome == 1 || outcome == 3 || outcome == 12)
               runStats.recordTerminal(finished = false, retry, cnt)
-            if (outcome == 0 && !r.isNullAt(3)) emittedImageCount += r.getLong(3)
+            if (outcome == 0 && !r.isNullAt(r.fieldIndex("imgs"))) emittedImageCount += r.getAs[Long]("imgs")
+            if (enforcePoliteness) {
+              val host = r.getAs[String]("host")
+              claimedPerHost(host) += cnt
+              got429(host) += r.getAs[Long]("n429")
+              if (!r.isNullAt(r.fieldIndex("ra"))) noteRetryAfter(host, r.getAs[Int]("ra"))
+            }
           }
           if (cfg.abortOnError &&
               aggRows.exists(r => { val o = r.getInt(0); o == 1 || o == 3 || o == 12 })) {
@@ -1372,23 +1290,17 @@ final class CrawlEngine(
                 .unionByName(newStates)))
             tierStateDirty = true
           }
-          if (enforcePoliteness) {
-            val hostRows = batch.groupBy(col("host")).count().collect()
-            val claimedPerHost = hostRows.map(r => r.getString(0) -> r.getLong(1)).toMap
-            val rows429 = unioned.filter(col("eff_status") === 429).groupBy(col("host")).count().collect()
-            throttle.update(nowMs, claimedPerHost,
-              rows429.map(r => r.getString(0) -> r.getLong(1)).toMap, retryAfterByHost(unioned))
-          }
         }
+        if (enforcePoliteness)
+          throttle.update(nowMs, claimedPerHost.toMap, got429.toMap.filter(_._2 > 0), retryAfter.toMap)
 
         // collect the prefetched next batch (usually already finished —
         // its checkpoint ran alongside the commit)
         prefetched = prefetchF.map(f => trace("prefetch-await")(Await.result(f, Duration.Inf)))
 
-        unioned.unpersist(false)
+        pin.unpersist(false)
         val batchWallMs = (System.nanoTime() - batchT0) / 1000000
-        if (sys.env.contains("GRAFT_TRACE"))
-          println(f"[trace] batch=$batchIdx batch-total ${batchWallMs / 1000.0}%.2fs")
+        Trace.line(f"batch=$batchIdx batch-total ${batchWallMs / 1000.0}%.2fs")
         batchSizer.foreach(_.record(claimedCount, batchWallMs, batchPeriodMs))
         events.emit(graft.events.Event.SystemInfo, batchWallMs) // X6 snapshot tick
         appendMetrics(batchIdx, nowMs, claimedCount,
@@ -1400,13 +1312,11 @@ final class CrawlEngine(
     val seen =
       if (trackOrder) store.state().select(col("unique_key")).collect().map(_.getString(0)).toSet
       else Set.empty[String]
-    seenCount = traceTop("seen-count")(
+    seenCount = Trace.span("engine.seen-count")(
       if (trackOrder) seen.size.toLong else store.state().count())
     runStats.addRuntime((System.nanoTime() - runT0) / 1000000L)
-    traceTop("run-teardown") {
-      flushMetrics()
-      runStats.persist()
-      persistProxyState()
+    Trace.span("engine.run-teardown") {
+      flushMetrics() // also persists the run statistics and proxy state
       // a compaction on the final commit defers its vacuum to "the next
       // commit" — which never comes once the crawl ends. Reclaim the
       // superseded snapshot/delta files now (the last prefetch was awaited
@@ -1539,17 +1449,57 @@ object CrawlEngine {
   val HrefPattern: String = graft.oracle.LinkSelector().pattern
   val BaseHrefPattern: String = "(?i)<base\\s[^>]*href\\s*=\\s*\"([^\"]*)\""
 
-  import org.apache.spark.sql.functions.col
+  import org.apache.spark.sql.functions._
   /** Batch frame columns: the full frontier event row (so terminal commits
-    * need no state join) plus the fetch-side columns.
+    * need no state join) plus the fetch-side columns and the row's class.
     */
   val resultCols: Seq[org.apache.spark.sql.Column] =
     graft.queue.FrontierStore.eventSchema.fieldNames.toSeq.map(col) ++ Seq(
       col("claim_rank"), col("loaded_url"), col("eff_status"),
       col("links"), col("base_url"), col("is_blocked"), col("p_images"),
       // adaptive delegation columns (constant literals when adaptive is off)
-      col("__route"), col("__mispred"), col("__detection")
+      col("__route"), col("__mispred"), col("__detection"),
+      col("__class")
     )
+
+  /** Batch row classes (`__class`); the non-fetched ones double as their
+    * outcome codes.
+    */
+  val ClassFetched: Int = 0
+  val ClassRedirectFail: Int = 10
+  val ClassRobotsSkip: Int = 11
+  val ClassCollided: Int = 12
+
+  /** The page table as the fetch joins read it, persisted (lazily). Adaptive
+    * mode reads the "browser" sub-crawler's view from optional
+    * rendered_body / rendered_images columns (null or absent = the page
+    * renders identically under both sub-crawlers).
+    *
+    * Hash-partitioned on the join key with the session's shuffle-partition
+    * count BEFORE the persist: both per-batch fetch joins (status and
+    * redirect hop) are keyed on p_url and require exactly that
+    * distribution, so the cached layout satisfies them and the page table
+    * — the heavy side, bodies included — never re-exchanges (guide §2.4);
+    * only the batch side shuffles. Sorted within partitions on the same
+    * key, so a sort-merge join's ordering requirement is ALSO satisfied
+    * straight from the cache.
+    */
+  def pinPages(spark: SparkSession, pages: DataFrame): DataFrame =
+    pages
+      .select(
+        col("url").as("p_url"),
+        col("status").as("p_status"),
+        col("redirect_to").as("p_redirect"),
+        col("body").as("p_body"),
+        col("image_ids").as("p_images"),
+        (if (pages.columns.contains("rendered_body")) col("rendered_body")
+         else lit(null).cast("string")).as("p_rbody"),
+        (if (pages.columns.contains("rendered_images")) col("rendered_images")
+         else lit(null).cast("array<string>")).as("p_rimages")
+      )
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("p_url"))
+      .sortWithinPartitions(col("p_url"))
+      .persist()
 
   /** One dispatched request entering the bench-mode tier fold: the claim
     * batch row (host, rank, key, previous-dispatch tier from the frontier

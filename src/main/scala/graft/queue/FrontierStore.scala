@@ -1,6 +1,7 @@
 package graft.queue
 
 import graft.schema.Status
+import graft.util.Trace
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -134,22 +135,39 @@ final class FrontierStore(
       }
   }
 
-  /** Fold one committed delta into both summaries — ONE small aggregate job
-    * per commit (cardinality: buckets x epochs x statuses).
+  /** Fold summary-count rows (bucket, status, epoch, prev_epoch, n) of one
+    * committed delta into both summaries. Rows may repeat a group (one per
+    * task of the fold pass); they are summed before the update.
     */
-  private def foldDeltaIntoSummaries(delta: DataFrame): Unit = if (claimBucketPruning) {
-    delta
-      .groupBy(bucketCol.as("b"), col("status"), epochExpr.as("e"), col("prev_epoch").as("pe"))
-      .count().collect()
-      .foreach { r =>
-        val st = r.getInt(1)
-        val n = r.getLong(4)
+  private def foldSummaryCounts(rows: Array[org.apache.spark.sql.Row]): Unit =
+    rows.groupMapReduce(r =>
+        (r.getInt(0), r.getInt(1), r.getLong(2), if (r.isNullAt(3)) None else Some(r.getLong(3))))(
+        _.getLong(4))(_ + _)
+      .foreach { case ((b, st, e, pe), n) =>
         val bucketDelta = if (st == Status.Handled) -n else if (st == Status.Pending) n else 0L
-        val b = r.getInt(0)
         bucketNonHandled(b) = math.max(0L, bucketNonHandled(b) + bucketDelta)
-        if (st == Status.Pending) epochPending(r.getLong(2)) += n
-        if (!r.isNullAt(3)) epochPending(r.getLong(3)) -= n
+        if (st == Status.Pending) epochPending(e) += n
+        pe.foreach(epochPending(_) -= n)
       }
+
+  /** The fold pass of one commit, after its manifest is durable: the
+    * summary counts (skipped when the commit compacted, which rebuilt them
+    * exactly) and, in bloom mode, the admitted keys into the shards, in ONE
+    * job over the delta. The shard version moves only after the manifest,
+    * so a crash between the two is replayed at the next open.
+    */
+  private def foldCommitted(delta: DataFrame, summaries: Boolean, bloom: Boolean): Unit = {
+    val groups =
+      if (summaries && claimBucketPruning)
+        Seq(bucketCol.as("b"), col("status"), epochExpr.as("e"), col("prev_epoch").as("pe"))
+      else Nil
+    val counts = bloomShards.filter(_ => bloom) match {
+      case Some(s) =>
+        s.foldCounting(delta, col("status") === Status.Pending && col("retry_count") === 0, groups, batchId)
+      case None if groups.nonEmpty => delta.groupBy(groups: _*).count().collect()
+      case None => Array.empty[org.apache.spark.sql.Row]
+    }
+    foldSummaryCounts(counts)
   }
 
   /** Driver-side pending-row estimate from the epoch summaries (may
@@ -347,32 +365,26 @@ final class FrontierStore(
   // ---- commit -------------------------------------------------------------
 
   /** Append `events` as one atomic commit: parquet delta write + manifest
-    * rename. New ordering counters are read back from one aggregate over the
-    * committed delta (no pre-write counting). Returns the number of events
-    * committed; an empty delta is dropped and leaves the manifest untouched.
+    * rename, then the fold pass. New ordering counters are read back from
+    * observed metrics of the write (no pre-write counting). Returns the
+    * number of events committed; an empty delta is dropped and leaves the
+    * manifest untouched. `bloomFold` folds the commit's admitted keys into
+    * the bloom shards (bloom mode).
     */
-  private def trace[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.contains("GRAFT_TRACE"))
-      println(f"[trace]   store.$label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    r
-  }
-
-  private def commitEvents(events: DataFrame): Long = synchronized {
+  private def commitEvents(events: DataFrame, bloomFold: Boolean): Long = synchronized {
     // a compaction from the PREVIOUS commit left superseded files behind:
     // reclaim them now, before any new work. Deferring vacuum one commit
     // guarantees a concurrently-prefetched claim (engine pipelining) has
     // finished its checkpoint before the files its lineage could reference
     // disappear — prefetches are always awaited before the next commit.
-    if (vacuumPending) { trace("vacuum")(vacuum()); vacuumPending = false }
+    if (vacuumPending) { Trace.span("store.vacuum")(vacuum()); vacuumPending = false }
     val bid = manifest.batchId + 1
     val deltaName = f"delta-$bid%06d"
     val deltaPath = s"$logDir/$deltaName"
     // Observation: the count/max stats ride on the write job itself —
     // no second read-the-delta-back aggregate action per commit.
     val obs = new org.apache.spark.sql.Observation(s"commit-$bid")
-    trace("delta-write")(events
+    Trace.span("store.delta-write")(events
       .observe(obs, count(lit(1)).as("n"), max(col("seq")).as("ms"),
         max(col("forefront_seq")).as("mf"), max(col("event_seq")).as("me"))
       .write.mode(SaveMode.Overwrite).parquet(deltaPath))
@@ -395,15 +407,14 @@ final class FrontierStore(
     )
     // merge the committed delta into the state chain (reading it back keeps
     // the chain's lineage rooted in parquet, never in caller DataFrames)
-    lastDeltaPath = deltaPath
-    trace("merge")(mergeDelta(delta, n))
-    trace("fold-summaries")(foldDeltaIntoSummaries(delta))
+    Trace.span("store.merge")(mergeDelta(delta, n))
     val compacted = nextManifest.deltas.size >= compactEvery
     val finalManifest =
-      if (compacted) trace("compact")(compact(nextManifest))
+      if (compacted) Trace.span("store.compact")(compact(nextManifest))
       else nextManifest
     Manifest.writeAtomic(manifestPath, finalManifest)
     manifest = finalManifest
+    Trace.span("store.fold")(foldCommitted(delta, summaries = !compacted, bloom = bloomFold))
     // reclaim superseded epochs once the new manifest is durable — at
     // cluster scale the un-vacuumed log grows without bound (every
     // compaction strands a snapshot epoch + compactEvery delta files).
@@ -460,8 +471,7 @@ final class FrontierStore(
     * superseded snapshot-epoch leaf dirs and delta files from before the
     * last compaction. Leaf-aware — bucket-local compaction leaves clean
     * buckets pointing at OLDER epochs, so partially-referenced epoch dirs
-    * lose only their unreferenced `__cb=` leafs. The most recent delta is
-    * always kept (the bloom fold reads it right after a commit). Runs only
+    * lose only their unreferenced `__cb=` leafs. Runs only
     * AFTER the new manifest is durable, so a crash mid-vacuum leaves
     * nothing dangling — every referenced file still exists.
     * Returns the number of entries removed.
@@ -471,7 +481,6 @@ final class FrontierStore(
     val refTop = scala.collection.mutable.Set.empty[String]
     m.deltas.foreach(refTop += _)
     m.snapshot.foreach(refTop += _)
-    if (lastDeltaPath != null) refTop += Paths.get(lastDeltaPath).getFileName.toString
     val refLeaf = m.bucketDirs.values.toSet // e.g. "snapshot-000016/__cb=4"
     val refEpochs = refLeaf.map(_.takeWhile(_ != '/'))
     var removed = 0L
@@ -818,22 +827,11 @@ final class FrontierStore(
     val allEvents = enqueueEvents.select(eventCols: _*)
       .unionByName(handledEvents)
       .unionByName(reclaimEvents)
-    val committed = commitEvents(allEvents)
+    // bloom mode folds this commit's admitted keys into the shard files in
+    // the commit's fold pass — fully executor-side, no driver hop that
+    // grows with the batch
+    val committed = commitEvents(allEvents, bloomFold = bloomDedup)
     if (committed > 0) signalNewWork() // P5: add/reclaim interrupts idle waits
-
-    // Bloom mode: fold this commit's admitted keys into the shard files —
-    // fully executor-side (repartition on bucket + per-bucket merge), no
-    // driver hop that grows with the batch. The shard version records the
-    // folded-through batch id for crash-replay on resume.
-    if (bloomDedup && committed > 0) {
-      bloomShards.foreach { s =>
-        s.fold(
-          latestDelta()
-            .filter(col("status") === Status.Pending && col("retry_count") === 0)
-            .select(col("key64")),
-          batchId)
-      }
-    }
 
     // Add report (for every candidate incl. in-batch duplicates); the exact
     // branch rides the same resolution shape as the enqueue join (the
@@ -852,14 +850,6 @@ final class FrontierStore(
           (col("ex_key").isNotNull && col("ex_status") === Status.Handled).as("was_already_handled")
         )
   }
-
-  /** Re-read the most recently committed delta file (tracked separately
-    * from the manifest because compaction clears the manifest's delta list).
-    */
-  private var lastDeltaPath: String = _
-  private def latestDelta(): DataFrame =
-    if (lastDeltaPath == null) emptyEvents(spark)
-    else spark.read.schema(eventSchema).parquet(lastDeltaPath)
 
   // ---- engine fast path: claim-free batch commit ------------------------------
 
@@ -887,8 +877,8 @@ final class FrontierStore(
     // NOTE a parallel range-sort rank variant (sort unbounded + rank filter,
     // partitions stay spread) was measured wall-neutral at the 262k-claim
     // local shape — TakeOrderedAndProject's map-side top-k + one merge is
-    // the better constant here; at 10^6+-row cluster claims the range-sort
-    // form (pickTop(bound = false) + withClaimRank(maxN)) is the swap-in.
+    // the better constant here. The returned plan is lazy: the engine
+    // evaluates it once, inside its batch pin.
     withClaimRank(pickTop(maxN, nowMs, hostQuota, defaultQuota, blockedHosts, quotaTable = quotaTable), maxN)
   }
 
@@ -930,8 +920,8 @@ final class FrontierStore(
     }
   }
 
-  /** Execute a claimPlan: order is already baked in; assign claim_rank and
-    * bound to maxN. Lock-free — safe to run concurrently with a commit.
+  /** Rank a claimPlan: order is already baked in; assign claim_rank and
+    * bound to maxN. Lock-free — safe to evaluate concurrently with a commit.
     */
   def rankClaim(plan: DataFrame, maxN: Int): DataFrame =
     withClaimRank(plan, maxN)
@@ -949,7 +939,6 @@ final class FrontierStore(
       hostQuota: Map[String, Int],
       defaultQuota: Int,
       blockedHosts: Set[String],
-      bound: Boolean = true,
       quotaTable: Option[DataFrame] = None
   ): DataFrame = {
     val st = state() // FIRST: a resumed store builds the driver summaries here
@@ -973,13 +962,11 @@ final class FrontierStore(
     val notBlocked =
       if (blockedHosts.isEmpty) eligible
       else eligible.filter(!col("host").isin(blockedHosts.toSeq: _*))
-    val sortKey = when(col("forefront"), -col("forefront_seq")).otherwise(col("seq"))
-    val base = notBlocked.withColumn("__sort", sortKey)
     val underQuota =
-      if (noQuota) base
+      if (noQuota) notBlocked
       else {
-        val hostRank = row_number().over(Window.partitionBy(col("host"))
-          .orderBy(col("forefront").desc, col("__sort").asc, col("unique_key")))
+        val base = notBlocked
+        val hostRank = row_number().over(Window.partitionBy(col("host")).orderBy(claimOrder: _*))
         quotaTable match {
           case Some(qt) =>
             // TABLE form: quotas ride a join keyed by host — only hosts
@@ -1000,24 +987,24 @@ final class FrontierStore(
               .drop("__host_rank")
         }
       }
-    val ordered = underQuota.orderBy(col("forefront").desc, col("__sort").asc, col("unique_key"))
-    (if (bound) ordered.limit(maxN) else ordered).drop("__sort")
+    underQuota.orderBy(claimOrder: _*).limit(maxN)
   }
 
-  /** Dense 1-based `claim_rank` over an already-sorted frame WITHOUT an
-    * unpartitioned window (which would re-sort on a single partition):
-    * the frame's row order (within ordered range partitions) IS the rank —
-    * zipWithIndex assigns it with no shuffle, and `maxN` bounds the claim
-    * when the input was not already limit()-ed.
+  /** The claim order: forefront rows first (newest forefront first), then
+    * FIFO by seq; unique_key makes it total.
     */
-  private def withClaimRank(sorted: DataFrame, maxN: Int): DataFrame = {
-    val outSchema = sorted.schema.add("claim_rank", org.apache.spark.sql.types.IntegerType)
-    val bound = maxN.toLong
-    val rdd = sorted.rdd.zipWithIndex.collect {
-      case (r, i) if i < bound => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1).toInt)
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+  private def claimOrder: Seq[org.apache.spark.sql.Column] =
+    Seq(col("forefront").desc, when(col("forefront"), -col("forefront_seq")).otherwise(col("seq")).asc,
+      col("unique_key").asc)
+
+  /** Dense 1-based `claim_rank` over a frame already bounded and sorted by
+    * [[claimOrder]], bounded to `maxN` rows. The claim's top-k output is
+    * ONE partition already in claim order, so the unpartitioned rank window
+    * adds no exchange and sorts at most `maxN` rows — no RDD round trip,
+    * and the claim stays a lazy plan that its consumer evaluates once.
+    */
+  private def withClaimRank(sorted: DataFrame, maxN: Int): DataFrame =
+    sorted.limit(maxN).withColumn("claim_rank", row_number().over(Window.orderBy(claimOrder: _*)))
 
   /** One commit for a whole engine micro-batch: enqueue `adds` (dedup +
     * ordering, exactly as commitResults), terminal outcomes, and reclaims.
@@ -1091,7 +1078,7 @@ final class FrontierStore(
       .select(eventCols: _*)
 
     val _ = (maxSeq, maxFf)
-    val n = commitEvents(claimEvents)
+    val n = commitEvents(claimEvents, bloomFold = false)
     lastClaimCount = n
     if (n > 0)
       // return the COMMITTED rows (from the refreshed state chain) so callers
@@ -1118,17 +1105,22 @@ final class FrontierStore(
 
   // ---- predicates (Q9) -------------------------------------------------------
 
-  def pendingCount(nowMs: Long): Long =
-    state().filter(
-      (col("status") === Status.Pending) ||
-        (col("status") === Status.InProgress && col("lock_expires_at") <= dLong(nowMs))
-    ).count()
+  /** (claimable, leased) row counts at `nowMs` in one aggregate: pending
+    * or lease-expired rows, and rows under a live lease.
+    */
+  private def liveCounts(nowMs: Long): (Long, Long) = {
+    val claimable = (col("status") === Status.Pending) ||
+      (col("status") === Status.InProgress && col("lock_expires_at") <= dLong(nowMs))
+    val leased = col("status") === Status.InProgress && col("lock_expires_at") > dLong(nowMs)
+    val r = state().agg(count(when(claimable, 1)), count(when(leased, 1))).head()
+    (r.getLong(0), r.getLong(1))
+  }
 
-  def inProgressCount(nowMs: Long): Long =
-    state().filter(col("status") === Status.InProgress && col("lock_expires_at") > dLong(nowMs)).count()
+  def pendingCount(nowMs: Long): Long = liveCounts(nowMs)._1
+  def inProgressCount(nowMs: Long): Long = liveCounts(nowMs)._2
 
   def isEmpty(nowMs: Long): Boolean = pendingCount(nowMs) == 0
-  def isFinished(nowMs: Long): Boolean = isEmpty(nowMs) && inProgressCount(nowMs) == 0
+  def isFinished(nowMs: Long): Boolean = liveCounts(nowMs) == ((0L, 0L))
 
   /** Metadata counters (Q11). */
   def metadata(): Map[String, Long] = {

@@ -91,6 +91,61 @@ class PlanQualitySpec extends SparkSpec {
     assert(pq.contains("Window") && pq.contains("windowspecdefinition(host"), pq)
   }
 
+  test("fetch joins run at the shuffle parallelism and never re-exchange the cached page table") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val key = "spark.sql.shuffle.partitions"
+    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = (spark.conf.get(key), spark.conf.get(bcKey))
+    // shuffle partitions set apart from the default parallelism: a page
+    // table partitioned by the wrong one would re-exchange in every join.
+    // No broadcast: a real page table is far above the threshold.
+    val parts = spark.sparkContext.defaultParallelism * 2 + 1
+    spark.conf.set(key, parts.toString)
+    spark.conf.set(bcKey, "-1")
+    val pages = (0 until 50)
+      .map(i => (s"https://a.com/$i", 200, null.asInstanceOf[String], s"<p>$i</p>", Seq(s"i$i")))
+      .toDF("url", "status", "redirect_to", "body", "image_ids")
+    val pinned = graft.engine.CrawlEngine.pinPages(spark, pages)
+    try {
+      // materialized first, as the engine does: a cached plan reports its
+      // partitioning once its adaptive plan is final
+      pinned.count()
+      val batch = (0 until 20).map(i => (s"https://a.com/${i * 3}", i)).toDF("url", "n")
+      // the engine's two fetch-join shapes: status join, redirect-hop join
+      val status = batch.join(pinned.select(col("p_url"), col("p_redirect")), col("url") === col("p_url"), "left")
+      val hop = status.withColumn("loaded_url", coalesce(col("p_redirect"), col("url")))
+        .drop("p_url", "p_redirect")
+        .join(pinned.select(col("p_url").as("t_url"), col("p_body")), col("loaded_url") === col("t_url"), "left")
+      val physical = hop.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+      // an exchange fed straight from the cached scan (through unary
+      // operators only) re-shuffles the page table itself
+      def readsCache(p: SparkPlan): Boolean = p match {
+        case _: InMemoryTableScanExec => true
+        case u if u.children.size == 1 => readsCache(u.children.head)
+        case _ => false
+      }
+      val overCache = physical.collect { case ex: ShuffleExchangeExec if readsCache(ex.child) => ex }
+      assert(physical.collect { case s: InMemoryTableScanExec => s }.size == 2, physical.toString)
+      assert(overCache.isEmpty, physical.toString)
+      // and the batch side shuffles to the session's partition count, not
+      // to a page-table layout left over from another setting
+      val exchangeParts = physical.collect { case ex: ShuffleExchangeExec => ex.outputPartitioning.numPartitions }
+      assert(exchangeParts.nonEmpty && exchangeParts.forall(_ == parts), physical.toString)
+      assert(hop.count() == 20)
+    } finally {
+      spark.conf.set(key, saved._1)
+      spark.conf.set(bcKey, saved._2)
+      pinned.unpersist()
+    }
+  }
+
   test("shingle self-join shuffles on the high-cardinality shingle key (no cartesian)") {
     val docs = spark.read.parquet(s"${sf("sf0.001")}/documents.parquet")
     val q = graft.ops.TextOps.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)

@@ -67,6 +67,22 @@ class DedupSpec extends SparkSpec {
     assert(re.mightContain(Hashing.xxh64("url-4999")))
   }
 
+  test("shard cache keeps one filter per bucket across fold versions") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("shardcache").toString
+    val buckets = 4
+    val s = new BloomShardStore(dir, buckets, expectedPerBucket = 1000, fpp = 1e-5)
+    (1 to 5).foreach { v =>
+      val keys = (0 until 200).map(i => s"v$v-$i")
+      s.fold(keys.map(Hashing.xxh64).toDF("key64"), newVersion = v.toLong)
+      // each probe loads this version's shards into the executor cache
+      val seen = s.probe(keys.toDF("unique_key"), "unique_key").filter("__seen").count()
+      assert(seen == keys.size)
+    }
+    val cached = BloomShardStore.ShardCache.cachedShards(dir)
+    assert(cached <= buckets, s"$cached cached filters for $buckets buckets after 5 folds")
+  }
+
   test("shard store: frontier crash-replay folds deltas committed after the last fold") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

@@ -18,7 +18,9 @@ class ResumePolitenessSpec extends SparkSpec {
   val seeds = Seq("https://h0.example.com/p/0", "https://h1.example.com/p/0")
 
   private def mkEngine(root: String, cfg: CrawlConfig, batchSize: Int,
-      politeness: Boolean = false, statusOverride: (String, Int) => Int = null): CrawlEngine = {
+      politeness: Boolean = false, statusOverride: (String, Int) => Int = null,
+      trackOrder: Boolean = true,
+      retryAfter: (String, Int) => Option[Int] = (_, _) => None): CrawlEngine = {
     import spark.implicits._
     val pagesDf = spark
       .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
@@ -30,6 +32,8 @@ class ResumePolitenessSpec extends SparkSpec {
     new CrawlEngine(
       spark, store, pagesDf, robots, cfg, claimBatchSize = batchSize,
       enforcePoliteness = politeness,
+      trackOrder = trackOrder,
+      retryAfterFn = retryAfter,
       statusAtFn = if (statusOverride != null) statusOverride
         else (url, attempt) => {
           val host = graft.canon.UrlCanon.parse(url).host
@@ -69,33 +73,75 @@ class ResumePolitenessSpec extends SparkSpec {
       full.handledOkKeys.size + full.failedKeys.size)
   }
 
-  test("P4 crawl-delay quota: a delay-2s host is claimed at most 1/batch") {
-    // h1 (index 1 % 4 == 1) carries Crawl-delay: 2; batchPeriod 1s -> quota 1
-    val root = Files.createTempDirectory("polite").toString
-    val cfg = CrawlConfig()
-    val engine = mkEngine(root, cfg, batchSize = 16, politeness = true)
-    val result = engine.run(Seq("https://h1.example.com/p/0"))
-    // every h1 fetch needed its own batch: batches >= fetch count
-    assert(result.batches >= result.crawlOrder.size,
-      s"batches ${result.batches} < fetches ${result.crawlOrder.size} — quota not enforced")
-    // and the crawl still completed (same seen set as an unthrottled run)
-    val unthrottled = mkEngine(Files.createTempDirectory("polite2").toString, cfg, 16).run(Seq("https://h1.example.com/p/0"))
-    assert(result.seenKeys == unthrottled.seenKeys)
+  /** (seen keys, handled-ok keys, rows fetched more than once) of the
+    * store at `root`: the same in both tracking modes (bench mode keeps
+    * none of these on the EngineResult).
+    */
+  private def storeOutcome(root: String): (Set[String], Set[String], Long) = {
+    val rows = new FrontierStore(spark, root).state()
+      .select("unique_key", "handled_ok", "retry_count").collect()
+    (rows.map(_.getString(0)).toSet,
+      rows.filter(r => !r.isNullAt(1) && r.getBoolean(1)).map(_.getString(0)).toSet,
+      rows.count(_.getInt(2) > 0).toLong)
   }
 
-  test("P3 429 backoff: a throttled host pauses, then succeeds after cooldown") {
-    // every first fetch on h0 returns 429; second attempt succeeds
-    val attempts = scala.collection.mutable.HashMap.empty[String, Int]
-    val statusFn: (String, Int) => Int = (url, attempt) => if (attempt == 0) 429 else 200
-    val root = Files.createTempDirectory("backoff").toString
-    val engine = mkEngine(root, CrawlConfig(maxRequestsPerCrawl = 6), batchSize = 4,
-      politeness = true, statusOverride = statusFn)
-    val result = engine.run(Seq("https://h0.example.com/p/0"))
-    val _ = attempts
-    // all processed urls required a retry -> every fetch appears twice in order
-    assert(result.handledOkKeys.nonEmpty)
-    assert(result.crawlOrder.size > result.handledOkKeys.size) // retries happened
-    // backoff inserted idle batches: batch count exceeds fetch count
-    assert(result.batches > result.handledOkKeys.size)
+  /** Per-batch claimed counts from the engine's metrics table. */
+  private def claimedPerBatch(root: String): Seq[Long] =
+    spark.read.parquet(s"$root/metrics").orderBy("batch_id").select("claimed").collect().map(_.getLong(0)).toSeq
+
+  for (trackOrder <- Seq(true, false)) {
+    def name(base: String) = if (trackOrder) base else s"$base (bench mode)"
+
+    test(name("P4 crawl-delay quota: a delay-2s host is claimed at most 1/batch")) {
+      // h1 (index 1 % 4 == 1) carries Crawl-delay: 2; batchPeriod 1s -> quota 1
+      val root = Files.createTempDirectory("polite").toString
+      val cfg = CrawlConfig()
+      val result = mkEngine(root, cfg, batchSize = 16, politeness = true, trackOrder = trackOrder)
+        .run(Seq("https://h1.example.com/p/0"))
+      // every h1 claim needed its own batch
+      val claimed = claimedPerBatch(root)
+      assert(claimed.forall(_ <= 1), s"claimed per batch $claimed — quota not enforced")
+      assert(result.batches >= claimed.sum)
+      if (trackOrder) assert(result.batches >= result.crawlOrder.size)
+      // and the crawl still completed (same seen set as an unthrottled run)
+      val root2 = Files.createTempDirectory("polite2").toString
+      mkEngine(root2, cfg, 16, trackOrder = trackOrder).run(Seq("https://h1.example.com/p/0"))
+      assert(storeOutcome(root)._1 == storeOutcome(root2)._1)
+    }
+
+    test(name("P3 429 backoff: a throttled host pauses, then succeeds after cooldown")) {
+      // every first fetch on h0 returns 429; second attempt succeeds
+      val statusFn: (String, Int) => Int = (_, attempt) => if (attempt == 0) 429 else 200
+      val root = Files.createTempDirectory("backoff").toString
+      val result = mkEngine(root, CrawlConfig(maxRequestsPerCrawl = 6), batchSize = 4,
+        politeness = true, statusOverride = statusFn, trackOrder = trackOrder)
+        .run(Seq("https://h0.example.com/p/0"))
+      val (_, handledOk, retried) = storeOutcome(root)
+      assert(handledOk.nonEmpty)
+      // all processed urls required a retry
+      assert(retried >= handledOk.size)
+      if (trackOrder) assert(result.crawlOrder.size > result.handledOkKeys.size)
+      // backoff inserted idle batches: batch count exceeds fetch count
+      assert(result.batches > handledOk.size)
+    }
+  }
+
+  test("P3 Retry-After beats the exponential schedule, identically in both modes") {
+    // every first fetch returns 429 with Retry-After: 5 s — five 1 s batch
+    // periods of backoff where the schedule would give two
+    val statusFn: (String, Int) => Int = (_, attempt) => if (attempt == 0) 429 else 200
+    def crawl(trackOrder: Boolean, header: Boolean): (Int, Set[String]) = {
+      val root = Files.createTempDirectory("retryafter").toString
+      val ra: (String, Int) => Option[Int] = (_, attempt) => if (header && attempt == 0) Some(5) else None
+      val result = mkEngine(root, CrawlConfig(maxRequestsPerCrawl = 6), batchSize = 4,
+        politeness = true, statusOverride = statusFn, trackOrder = trackOrder, retryAfter = ra)
+        .run(Seq("https://h0.example.com/p/0"))
+      (result.batches, storeOutcome(root)._1)
+    }
+    val parity = crawl(trackOrder = true, header = true)
+    val bench = crawl(trackOrder = false, header = true)
+    assert(parity == bench)
+    val schedule = crawl(trackOrder = false, header = false)
+    assert(bench._1 > schedule._1, s"Retry-After crawl ${bench._1} batches, schedule ${schedule._1}")
   }
 }

@@ -167,8 +167,8 @@ class FrontierStoreSpec extends SparkSpec {
       // hostA's bucket is now exhausted (exact -1 per handled); hostB's rows
       // are stale-reclaimable at t=2000
       val cs = store.claimSet(20, nowMs = 2000L)
-      // the rank stage is an RDD zipWithIndex, so the SELECTION plan (the
-      // part bucket pruning applies to) is asserted via pickTop directly
+      // the SELECTION plan (the part bucket pruning applies to) is
+      // asserted via pickTop directly
       val plan = store.pickTop(20, 2000L, Map.empty, Int.MaxValue, Set.empty)
         .queryExecution.executedPlan.toString
       (cs.select("unique_key").collect().map(_.getString(0)).toSet, plan)
