@@ -146,10 +146,12 @@ final class BloomShardStore(
     counts
   }
 
-  /** Driver-side point probe (tests / tiny paths). */
-  def mightContain(key64: Long): Boolean = {
-    val path = shardPath(dir, bucketOf(key64))
-    Files.exists(path) && readShard(path).mightContainLong(key64)
+  /** Driver-side point probe: the answer [[probe]] gives for `key64` at
+    * fold version `atVersion`, from the same shard cache.
+    */
+  def mightContain(key64: Long, atVersion: Long = version): Boolean = {
+    val shard = ShardCache.get(dir, bucketOf(key64), atVersion)
+    shard != null && shard.mightContainLong(key64)
   }
 
   /** Total bytes across shard files (scale telemetry). */

@@ -16,6 +16,28 @@ import scala.collection.mutable
 /** The Spark-native crawl loop (SURVEY.md §3.1): an iterative micro-batch
   * driver loop of claim → fetch → handle → commit over the FrontierStore.
   *
+  * One run (`runRequests`), with the Spark executions each stage pays:
+  *   1. open        — the page-table pin (1) and the bound-session scan
+  *                    (1); on a resumed store the scan's first state read
+  *                    also opens the store (1 aggregate: row count and
+  *                    claim summaries).
+  *   2. seed enqueue — bloom mode drops the seeds the seen-shards already
+  *                    hold on the driver (no execution); the rest commit
+  *                    as one delta (write + fold, 2), and none at all
+  *                    commits nothing. Exact mode always commits.
+  *   3. batches     — four executions each (below).
+  *   4. drain proof — when the store's bookkeeping shows every claim
+  *                    bucket empty (FrontierStore.drained) the crawl is
+  *                    idle without a claim (0). Otherwise an empty claim
+  *                    decides: pin, outcome aggregate, and one pending
+  *                    count under politeness (3).
+  *   5. teardown    — the metrics flush and the statistics write (2, plus
+  *                    the proxy state when configured). The seen count is
+  *                    read on demand after the run (`seenCount`).
+  * A resumed run over a drained store therefore pays only its open and
+  * teardown; a store compaction adds its snapshot write and summary
+  * rebuild (2) to the commit that triggers it.
+  *
   * One micro-batch off the prefetch path runs four Spark executions:
   *   1. pin      — ONE linear plan, localCheckpoint-ed: the claim
   *                 (FrontierStore.claimSet, top-k under per-host quota,
@@ -266,10 +288,17 @@ final class CrawlEngine(
           )
       }
       boundSessionIds ++= srs.flatMap(_.sessionId)
-      val seedDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, math.max(1, math.min(rows.size, 4))),
-        CrawlEngine.seedSchema)
-      store.addBatch(seedDf, candBound = rows.size.toLong)
+      // bloom mode answers "already seen" on the driver for driver-held
+      // seeds (a resumed run re-sends its whole seed list): only unseen
+      // keys reach the executor-side probe, and none at all means no commit
+      val known = store.knownKeys(rows.map(_.getString(0))).getOrElse(Set.empty)
+      val fresh = rows.filterNot(r => known(r.getString(0)))
+      if (fresh.nonEmpty) {
+        val seedDf = spark.createDataFrame(
+          spark.sparkContext.parallelize(fresh, math.max(1, math.min(fresh.size, 4))),
+          CrawlEngine.seedSchema)
+        store.addBatch(seedDf, candBound = fresh.size.toLong)
+      }
     }
     Trace.span("engine.seed-enqueue")(enqueueSeeds(seeds))
 
@@ -351,7 +380,7 @@ final class CrawlEngine(
     val emittedImages = mutable.ArrayBuffer.empty[String]
     var emittedImageCount = 0L
     var processedTotal = 0L
-    seenCount = 0L
+    seenCountOf = None
     var batchIdx = 0
     // adaptive delegation counters (reference track_* methods,
     // _adaptive_playwright_crawler.py:496-503) + the detection log
@@ -442,13 +471,31 @@ final class CrawlEngine(
     var prefetchHits = 0
 
     var done = false
-    while (!done && !stopRequested && processedTotal < cfg.maxRequestsPerCrawl) {
-      val batchT0 = System.nanoTime()
-      // P5: capture the new-work epoch BEFORE the claim evaluates, so a
-      // concurrent add racing this iteration's empty claim wakes the idle
-      // wait immediately instead of being missed until the next commit.
-      val workEpochBefore = store.newWorkEpoch
-      val nowMs = batchIdx.toLong * batchPeriodMs
+    // A batch that claimed nothing. A proven drain needs no pending count.
+    def idle(nowMs: Long, workEpochBefore: Long, drainProven: Boolean): Unit =
+      // all throttled (pending rows remain): advance the virtual clock
+      // (P2 sleep); a non-empty pending set already implies !isFinished
+      if (enforcePoliteness && !drainProven && store.pendingCount(nowMs) > 0) {
+        batchIdx += 1
+      } else if (cfg.keepAlive) {
+        // X5 keep_alive: idle doesn't stop the crawl; the idle hook may
+        // inject new work (reference test_basic_crawler.py:1681+) or stop it
+        onIdle(batchIdx) match {
+          case Some(newSeeds) => enqueueSeeds(newSeeds); batchIdx += 1
+          case None =>
+            // P5 new-work wakeup: before concluding the crawl is drained,
+            // block on the store's add/reclaim event (a concurrent
+            // streaming ingest or external producer may still be
+            // committing). Woken -> claim again; timeout -> finished.
+            if (cfg.newWorkWaitMs > 0L &&
+                store.awaitNewWork(workEpochBefore, cfg.newWorkWaitMs)) batchIdx += 1
+            else done = true
+        }
+      } else done = true
+
+    // One batch: the claim and its pin, the outcome read, and the commit;
+    // an empty claim ends in `idle`.
+    def batch(batchT0: Long, workEpochBefore: Long, nowMs: Long): Unit = {
       // R6: never claim more than the remaining budget (reproduces the
       // concurrency-1 exactness of test_basic_crawler.py:1094-1122);
       // X4: the rate cap bounds tasks dispatched per batch period
@@ -722,25 +769,7 @@ final class CrawlEngine(
 
       if (claimedCount == 0) {
         pin.unpersist(false)
-        // all throttled (pending rows remain): advance the virtual clock
-        // (P2 sleep); a non-empty pending set already implies !isFinished
-        if (enforcePoliteness && store.pendingCount(nowMs) > 0) {
-          batchIdx += 1
-        } else if (cfg.keepAlive) {
-          // X5 keep_alive: idle doesn't stop the crawl; the idle hook may
-          // inject new work (reference test_basic_crawler.py:1681+) or stop it
-          onIdle(batchIdx) match {
-            case Some(newSeeds) => enqueueSeeds(newSeeds); batchIdx += 1
-            case None =>
-              // P5 new-work wakeup: before concluding the crawl is drained,
-              // block on the store's add/reclaim event (a concurrent
-              // streaming ingest or external producer may still be
-              // committing). Woken -> claim again; timeout -> finished.
-              if (cfg.newWorkWaitMs > 0L &&
-                  store.awaitNewWork(workEpochBefore, cfg.newWorkWaitMs)) batchIdx += 1
-              else done = true
-          }
-        } else done = true
+        idle(nowMs, workEpochBefore, drainProven = false)
       } else {
         val processedBefore = processedTotal
 
@@ -1309,11 +1338,26 @@ final class CrawlEngine(
       }
     }
 
+    while (!done && !stopRequested && processedTotal < cfg.maxRequestsPerCrawl) {
+      val batchT0 = System.nanoTime()
+      // P5: capture the new-work epoch BEFORE the claim evaluates, so a
+      // concurrent add racing this iteration's empty claim wakes the idle
+      // wait immediately instead of being missed until the next commit.
+      val workEpochBefore = store.newWorkEpoch
+      val nowMs = batchIdx.toLong * batchPeriodMs
+      // Drain proof: when the store's bookkeeping shows no claimable row
+      // (FrontierStore.drained), the batch is idle without building a
+      // claim — no pin, no outcome aggregate, no pending count. A pending
+      // prefetch, or bookkeeping that cannot prove it, leaves the decision
+      // to the empty claim below.
+      if (prefetched.isEmpty && store.drained) idle(nowMs, workEpochBefore, drainProven = true)
+      else batch(batchT0, workEpochBefore, nowMs)
+    }
+
     val seen =
       if (trackOrder) store.state().select(col("unique_key")).collect().map(_.getString(0)).toSet
       else Set.empty[String]
-    seenCount = Trace.span("engine.seen-count")(
-      if (trackOrder) seen.size.toLong else store.state().count())
+    seenCountOf = if (trackOrder) Some(seen.size.toLong) else None
     runStats.addRuntime((System.nanoTime() - runT0) / 1000000L)
     Trace.span("engine.run-teardown") {
       flushMetrics() // also persists the run statistics and proxy state
@@ -1351,8 +1395,15 @@ final class CrawlEngine(
     )
   }
 
-  /** Row count of the final seen-set (valid in both tracking modes). */
-  @volatile var seenCount: Long = 0L
+  /** Row count of the seen-set after the last run (valid in both tracking
+    * modes). Parity mode keeps the size of the set it collects; bench mode
+    * counts the store's state on the first read after the run.
+    */
+  def seenCount: Long = synchronized {
+    if (seenCountOf.isEmpty) seenCountOf = Some(store.state().count())
+    seenCountOf.get
+  }
+  @volatile private var seenCountOf: Option[Long] = None
 
   /** Cooperative stop (reference BasicCrawler.stop(),
     * _basic_crawler.py:539-548): callable from any thread or from inside a

@@ -78,16 +78,25 @@ final class FrontierStore(
   //
   // Driver-side per-bucket upper bound on non-handled rows, keyed by
   // pmod(host_hash, claimBuckets). Maintained from each commit's delta:
-  // a Handled event is exactly -1 (handled is terminal and reachable only
-  // from in-progress), a Pending event is +1 — an OVERCOUNT for reclaims/
-  // repositions (net-0 transitions), which is safe: a bucket is pruned only
-  // when its bound is 0, and the bound never undercounts. The bound is
-  // reset EXACTLY at every compaction and at resume (one aggregate over the
-  // state being rewritten anyway), so reclaim-driven drift is bounded by
-  // compactEvery commits. The claim then scans only buckets with a nonzero
-  // bound — late in a crawl (most hosts exhausted) that prunes most of the
-  // state; at cluster scale the snapshot would be cluster-bucketed on the
-  // same key so the pruning maps to file skipping.
+  //  - a Handled event is exactly -1 (handled is terminal and reachable
+  //    only from a non-handled row);
+  //  - a Pending event with a null `prev_epoch` is +1: a brand-new key, or
+  //    a contract-path reclaim from InProgress (which consumed no pending
+  //    position, so it keeps the safe overcount);
+  //  - a Pending event with a non-null `prev_epoch` is net 0: it consumed
+  //    a Pending position of the same key (engine reclaims, session
+  //    rotations, forefront repositions) — unless `keysMayChangeBuckets`
+  //    is set, because the event's bucket may then differ from the bucket
+  //    it left, and the new bucket must count it (+1).
+  // Every rule errs up, never down, which is what makes the bound safe: a
+  // bucket is pruned only when its bound is 0. The bound is reset EXACTLY
+  // at every compaction and at resume (one aggregate over the state being
+  // rewritten anyway), so any drift is bounded by compactEvery commits. The
+  // claim then scans only buckets with a nonzero bound — late in a crawl
+  // (most hosts exhausted) that prunes most of the state; at cluster scale
+  // the snapshot would be cluster-bucketed on the same key so the pruning
+  // maps to file skipping. All bounds at 0 prove the queue drained
+  // ([[drained]]).
   private val bucketNonHandled = scala.collection.mutable.HashMap.empty[Int, Long].withDefaultValue(0L)
 
   private def bucketCol = pmod(col("host_hash"), lit(claimBuckets)).cast("int")
@@ -119,19 +128,23 @@ final class FrontierStore(
   /** Position epoch of an event row: -1 for forefront, seq >> 42 otherwise. */
   private def epochExpr = when(col("forefront_seq") >= 0, lit(-1L)).otherwise(shiftright(col("seq"), 42))
 
-  /** Exact rebuild of both driver summaries in ONE aggregate (resume +
-    * compaction reset points).
+  /** Exact rebuild of both driver summaries in ONE aggregate over every
+    * state row (resume + compaction reset points); returns the state's row
+    * count. Handled rows fold into one group: only their count is used.
     */
-  private def rebuildSummaries(): Unit = if (claimBucketPruning) {
+  private def rebuildSummaries(): Long = {
     bucketNonHandled.clear()
     epochPending.clear()
-    stateDf.filter(col("status") =!= Status.Handled)
-      .groupBy(bucketCol.as("b"), col("status"), epochExpr.as("e"))
+    val handled = col("status") === Status.Handled
+    stateDf
+      .groupBy(when(handled, lit(-1)).otherwise(bucketCol).as("b"), col("status"),
+        when(handled, lit(0L)).otherwise(epochExpr).as("e"))
       .count().collect()
-      .foreach { r =>
+      .foldLeft(0L) { (rows, r) =>
         val n = r.getLong(3)
-        bucketNonHandled(r.getInt(0)) += n
+        if (r.getInt(1) != Status.Handled) bucketNonHandled(r.getInt(0)) += n
         if (r.getInt(1) == Status.Pending) epochPending(r.getLong(2)) += n
+        rows + n
       }
   }
 
@@ -144,7 +157,10 @@ final class FrontierStore(
         (r.getInt(0), r.getInt(1), r.getLong(2), if (r.isNullAt(3)) None else Some(r.getLong(3))))(
         _.getLong(4))(_ + _)
       .foreach { case ((b, st, e, pe), n) =>
-        val bucketDelta = if (st == Status.Handled) -n else if (st == Status.Pending) n else 0L
+        val bucketDelta =
+          if (st == Status.Handled) -n
+          else if (st == Status.Pending && (pe.isEmpty || keysMayChangeBuckets)) n
+          else 0L
         bucketNonHandled(b) = math.max(0L, bucketNonHandled(b) + bucketDelta)
         if (st == Status.Pending) epochPending(e) += n
         pe.foreach(epochPending(_) -= n)
@@ -188,6 +204,16 @@ final class FrontierStore(
       if (cum >= maxN) return Some(e)
     }
     None
+  }
+
+  /** True when the driver bookkeeping PROVES the queue drained: the state
+    * is built, bucket pruning is on, and every bucket bound is 0 — no
+    * pending, in-progress or lease-expired row remains, since the bound
+    * never undercounts. False only means "not proven"; callers then let an
+    * empty claim decide.
+    */
+  def drained: Boolean = synchronized {
+    stateDf != null && claimBucketPruning && bucketNonHandled.valuesIterator.forall(_ == 0L)
   }
 
   /** Buckets that may still hold claimable rows (None = no pruning possible). */
@@ -271,9 +297,11 @@ final class FrontierStore(
         if (files.isEmpty) emptyEvents(spark)
         else latestWins(spark.read.schema(eventSchema).parquet(files: _*))
       materialize()
-      // one count at resume seeds the join-shape crossover exactly
-      stateRowsBound = if (files.isEmpty) 0L else stateDf.count()
-      rebuildSummaries() // resume: exact per-bucket/per-epoch claimable bounds
+      // ONE aggregate at resume: the exact per-bucket/per-epoch claimable
+      // bounds and the row count that seeds the join-shape crossover. It
+      // ADDS to the bound: a caller may already have counted rows into it.
+      stateRowsBound +=
+        (if (files.isEmpty) 0L else if (claimBucketPruning) rebuildSummaries() else stateDf.count())
     }
     stateDf
   }
@@ -306,22 +334,23 @@ final class FrontierStore(
     */
   private def mergeDelta(delta: DataFrame, deltaRows: Long): Unit = {
     stateRowsBound += deltaRows // upper bound: new keys <= delta rows
-    // coalesce the DELTA side (narrow, batch-scale) before the union: the
-    // window behind latestWins leaves shuffle.partitions partitions, and
-    // a union per commit grew the cached chain by that many — late in a
-    // crawl every state scan was a 449-task stage of mostly-empty tasks
-    // (event-log measured). Only the delta side is squeezed; the cached
-    // base keeps its layout untouched.
-    val deltaLatest = latestWins(delta).coalesce(4)
     // Small deltas: broadcast anti-join (no shuffle of the base, but the
-    // broadcast build is a DRIVER-side collect — serial). Large deltas
-    // (bulk enqueues): a shuffled anti-join keeps everything parallel.
+    // broadcast build is a DRIVER-side collect — serial). The delta side
+    // (narrow, batch-scale) is coalesced before the union: the window
+    // behind latestWins leaves shuffle.partitions partitions, and a union
+    // per commit grew the cached chain by that many — late in a crawl every
+    // state scan was a 449-task stage of mostly-empty tasks (event-log
+    // measured). Large deltas (bulk enqueues): a shuffled anti-join, and
+    // the delta keeps the window's parallelism. The cached base keeps its
+    // layout untouched either way.
+    val deltaLatest = latestWins(delta)
     stateDf =
-      if (deltaRows <= 65536)
+      if (deltaRows <= 65536) {
+        val small = deltaLatest.coalesce(4)
         state()
-          .join(broadcast(deltaLatest.select(col("unique_key"))), Seq("unique_key"), "left_anti")
-          .unionByName(deltaLatest)
-      else
+          .join(broadcast(small.select(col("unique_key"))), Seq("unique_key"), "left_anti")
+          .unionByName(small)
+      } else
         state()
           .join(deltaLatest.select(col("unique_key")), Seq("unique_key"), "left_anti")
           .unionByName(deltaLatest)
@@ -557,7 +586,7 @@ final class FrontierStore(
         if (keysMayChangeBuckets) latestWins(read) else read
       }
     materialize()
-    rebuildSummaries() // exact reset: clears reclaim-driven overcount drift
+    if (claimBucketPruning) rebuildSummaries() // exact reset: clears overcount drift
     m.copy(snapshot = None, deltas = Vector.empty, bucketDirs = liveBucketDirs)
   }
 
@@ -852,6 +881,18 @@ final class FrontierStore(
   }
 
   // ---- engine fast path: claim-free batch commit ------------------------------
+
+  /** Bloom mode: the keys among `keys` the seen-shards already hold,
+    * probed on the driver at the shard version the executor-side probe of
+    * [[addBatch]] reads — so dropping them first admits exactly the same
+    * keys. None in exact mode, which has no driver-side answer.
+    */
+  def knownKeys(keys: Seq[String]): Option[Set[String]] = synchronized {
+    bloomShards.map { s =>
+      val v = s.version
+      keys.iterator.filter(k => s.mightContain(graft.canon.Hashing.xxh64(k), v)).toSet
+    }
+  }
 
   /** Select (do NOT commit) the next claim set: same ordering/quota logic as
     * `claim`, returned with a `claim_rank` column. The engine pairs this

@@ -32,7 +32,8 @@ final class KeyValueStore(spark: SparkSession, root: String) {
   // statistics, cursors — the reference holds them in memory too)
   private val records = scala.collection.mutable.LinkedHashMap.empty[String, (String, Array[Byte])]
   if (version >= 0) {
-    spark.read.parquet(s"$root/v$version").collect().foreach { r =>
+    // the fixed record schema: no schema-inference job before the collect
+    spark.read.schema(KeyValueStore.RecordSchema).parquet(s"$root/v$version").collect().foreach { r =>
       records(r.getString(0)) = (r.getString(1), r.getAs[Array[Byte]](2))
     }
   }
@@ -100,4 +101,11 @@ final class KeyValueStore(spark: SparkSession, root: String) {
     version = next
     next
   }
+}
+
+object KeyValueStore {
+
+  /** The persisted record schema (see [[KeyValueStore.asDataFrame]]). */
+  val RecordSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL("key STRING, content_type STRING, value BINARY")
 }

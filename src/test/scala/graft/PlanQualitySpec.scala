@@ -56,6 +56,25 @@ class PlanQualitySpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin") || p.contains("InMemoryTableScan"), p)
   }
 
+  test("a bulk enqueue delta keeps its parallelism in the state merge; small deltas are coalesced") {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    def cand(from: Long, n: Long) = spark.range(from, from + n).select(
+      concat(lit("k"), col("id")).as("unique_key"), concat(lit("https://a.com/"), col("id")).as("url"),
+      lit("a.com").as("host"), lit(null).cast("string").as("label"), lit("GET").as("method"),
+      lit(0).as("depth"), lit(false).as("forefront"), col("id").as("cand_order"))
+    // narrowing coalesces (no shuffle) in the plan that built the state
+    def coalesces(st: org.apache.spark.sql.DataFrame): Seq[Int] =
+      st.queryExecution.analyzed.collect { case r: Repartition if !r.shuffle => r.numPartitions }
+    val store = new graft.queue.FrontierStore(
+      spark, java.nio.file.Files.createTempDirectory("planbulk").toString)
+    store.addBatch(cand(0L, 70000L)) // above the 65,536-row broadcast gate
+    assert(coalesces(store.state()).isEmpty, store.state().queryExecution.analyzed.toString)
+    assert(store.state().count() == 70000L)
+    store.addBatch(cand(70000L, 10L))
+    val small = coalesces(store.state())
+    assert(small.nonEmpty && small.forall(_ == 4), store.state().queryExecution.analyzed.toString)
+  }
+
   test("brute-force ANN broadcasts the small query side (no shuffle of the corpus)") {
     val emb = spark.read.parquet(s"${sf("sf0.001")}/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))

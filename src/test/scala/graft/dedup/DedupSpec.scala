@@ -104,6 +104,38 @@ class DedupSpec extends SparkSpec {
     assert(store2.state().filter(col("unique_key") === "a").count() == 1)
   }
 
+  test("shard store: the driver-side seed probe admits exactly the keys the executor probe admits") {
+    import spark.implicits._
+    def cand(ks: Seq[String]) = ks.zipWithIndex
+      .map { case (k, i) => (k, s"https://x.com/$k", "x.com", null.asInstanceOf[String], "GET", 0, false, i.toLong) }
+      .toDF("unique_key", "url", "host", "label", "method", "depth", "forefront", "cand_order")
+    def keysOf(st: graft.queue.FrontierStore): Set[String] =
+      st.state().select("unique_key").collect().map(_.getString(0)).toSet
+    val first = (0 until 300).map(i => s"seed-$i")
+    val again = (150 until 450).map(i => s"seed-$i") // half already seen
+    val roots = Seq.fill(2)(Files.createTempDirectory("seedprobe").toString)
+    val Seq(viaExecutor, viaDriver) = roots.map { r =>
+      val st = new graft.queue.FrontierStore(spark, r, bloomDedup = true, bloomBuckets = 8)
+      st.addBatch(cand(first))
+      st
+    }
+    val known = viaDriver.knownKeys(again).get
+    // the same answer the executor-side probe gives at this shard version
+    val probed = BloomShardStore.openOrCreate(s"${roots(1)}/bloom", 0, 0, 0)
+      .probe(again.toDF("unique_key"), "unique_key")
+      .collect().filter(_.getBoolean(1)).map(_.getString(0)).toSet
+    assert(known == probed)
+    assert(known == (150 until 300).map(i => s"seed-$i").toSet)
+    // re-adding every seed, or only the driver-unseen ones, admits the same keys
+    viaExecutor.addBatch(cand(again))
+    viaDriver.addBatch(cand(again.filterNot(known)))
+    assert(keysOf(viaExecutor) == keysOf(viaDriver))
+    assert(keysOf(viaDriver).size == 450)
+    // exact mode has no driver-side answer
+    val exact = new graft.queue.FrontierStore(spark, Files.createTempDirectory("seedexact").toString)
+    assert(exact.knownKeys(again).isEmpty)
+  }
+
   test("cuckoo: insert, lookup, delete") {
     val f = CuckooFilter.forCapacity(10000)
     val keys = (0 until 8000).map(i => Hashing.xxh64(s"c-$i"))

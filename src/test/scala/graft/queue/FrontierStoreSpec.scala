@@ -1,6 +1,10 @@
 package graft.queue
 
 import graft.SparkSpec
+import graft.canon.{Hashing, Robots, UrlCanon}
+import graft.engine.CrawlEngine
+import graft.fixtures.{SyntheticWeb, WebSpec}
+import graft.oracle.{CrawlConfig, CrawlOracle, RequestOptions}
 import graft.schema.Status
 import org.apache.spark.sql.functions._
 
@@ -451,5 +455,64 @@ class FrontierStoreSpec extends SparkSpec {
     assert(store.awaitNewWork(e0, 30000L))
     // and with no new commit the wait times out (bounded, returns false)
     assert(!store.awaitNewWork(store.newWorkEpoch, 250L))
+  }
+
+  /** A bench-mode crawl of every main-host page of `spec` into `store`. */
+  private def crawlInto(store: FrontierStore, spec: WebSpec, cfg: CrawlConfig): Unit = {
+    import spark.implicits._
+    val sp = spec // the closures must not capture the suite
+    val pages = spark.createDataset((0L until sp.totalPages.toLong).map(g => SyntheticWeb.pageAt(sp, g))).toDF()
+    val robots = SyntheticWeb.allRobots(sp)
+      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
+    val seeds = for (h <- 0 until sp.hosts; i <- 0 until sp.pagesPerHost) yield SyntheticWeb.urlOf(sp, h, i)
+    new CrawlEngine(spark, store, pages, robots, cfg,
+      claimBatchSize = 16, trackOrder = false, trackImages = false,
+      statusAtFn = (url, attempt) => SyntheticWeb.statusAt(sp,
+        CrawlOracle.hostIdx(sp, UrlCanon.parse(url).host),
+        CrawlOracle.pageIdx(url), attempt)
+    ).run(seeds)
+    ()
+  }
+
+  private def claimBucketOf(host: String): Int = {
+    val k = Hashing.xxh64(host)
+    (((k % 64) + 64) % 64).toInt
+  }
+
+  test("after a bloom crawl with retries and session rotations every bucket bound is 0: drained") {
+    // no compaction during the crawl: the bounds come from the per-commit
+    // fold alone, never from an exact rebuild. Without compaction the
+    // cached state chain deepens with every commit, so the web stays small
+    // (2 hosts: ~9 commits, still with retries and a dozen rotations)
+    val store = new FrontierStore(spark, Files.createTempDirectory("drain").toString,
+      bloomDedup = true, compactEvery = 1000)
+    crawlInto(store, WebSpec(hosts = 2, pagesPerHost = 40, otherOrgPages = 4,
+      subHostPages = 4, blockedEvery = 5), CrawlConfig(detectBlocked = true, maxSessionRotations = 2))
+    val st = store.state()
+    assert(st.filter(col("retry_count") > 0).count() > 0, "the crawl must retry (429/5xx)")
+    assert(st.filter(col("rotation_count") > 0).count() > 0, "the crawl must rotate sessions")
+    assert(store.metadata()("pending_request_count") == 0)
+    // every bucket bound is 0
+    assert(store.drained)
+  }
+
+  test("a host-replacing error handler: the crawl still reaches every replaced URL") {
+    val spec = WebSpec(hosts = 6, pagesPerHost = 40, otherOrgPages = 4, subHostPages = 4)
+    // retried requests move to a host whose claim bucket holds no other row:
+    // a bound that did not count the moved rows would prune them forever
+    val webBuckets = (0 until spec.hosts).map(h => claimBucketOf(SyntheticWeb.hostName(spec, h))).toSet
+    val moved = Iterator.from(0).map(i => s"moved$i.example.net").find(h => !webBuckets(claimBucketOf(h))).get
+    val handler: (RequestOptions, Int) => Option[RequestOptions] =
+      (r, _) =>
+        if (r.url.contains(moved)) None
+        else Some(RequestOptions(r.url.replace("https://", s"https://$moved/"), r.label))
+    val store = new FrontierStore(spark, Files.createTempDirectory("replaced").toString,
+      bloomDedup = true, compactEvery = 1000)
+    crawlInto(store, spec, CrawlConfig(errorHandler = Some(handler)))
+    val replaced = store.state().filter(col("host") === moved).select("url", "status").collect()
+    assert(replaced.nonEmpty, "the crawl must retry some request")
+    // a moved URL has no page: one fetch, a terminal 404
+    assert(replaced.forall(_.getInt(1) == Status.Handled), replaced.mkString(", "))
+    assert(store.metadata()("pending_request_count") == 0)
   }
 }

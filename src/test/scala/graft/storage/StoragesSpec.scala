@@ -89,4 +89,34 @@ class StoragesSpec extends SparkSpec {
     assert(spk.openRequestQueue().isInstanceOf[graft.queue.FrontierQueueClient])
     assert(spk.openKeyValueStore().isInstanceOf[SnapshotKeyValueStoreClient])
   }
+
+  test("reopening a persisted key-value store runs one Spark job (no schema inference)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import java.util.concurrent.atomic.AtomicInteger
+    val root = Files.createTempDirectory("kvs-reopen").toString
+    val kvs = new KeyValueStore(spark, root)
+    kvs.setJson("STATE", """{"n":1}""")
+    kvs.setValue("BLOB", Array[Byte](1, 2, 3))
+    kvs.persist()
+    val starts = new AtomicInteger()
+    val ends = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val reopened =
+      try {
+        val r = new KeyValueStore(spark, root)
+        val deadline = System.currentTimeMillis() + 20000L
+        while ((starts.get == 0 || starts.get != ends.get) && System.currentTimeMillis() < deadline)
+          Thread.sleep(100)
+        Thread.sleep(300) // a late job start would still land here
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(starts.get == 1, s"${starts.get} jobs to reopen a key-value store")
+    assert(reopened.getJson("STATE").contains("""{"n":1}"""))
+    assert(reopened.getValue("BLOB").exists(_.sameElements(Array[Byte](1, 2, 3))))
+    assert(reopened.getContentType("BLOB").contains("application/octet-stream"))
+  }
 }

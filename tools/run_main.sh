@@ -5,6 +5,9 @@
 set -e
 CLASS="$1"; shift
 CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+# Default heap: half of MemTotal in GiB, clamped to 2..8 (the rule the
+# Tier-1 test run and perfbench use); SPARK_DRIVER_MEM overrides it.
+HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' </proc/meminfo 2>/dev/null || echo 2g)}"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
@@ -21,5 +24,6 @@ exec java \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-48g}" \
+  -Dspark.sql.codegen.cache.maxEntries=8192 \
+  -Xmx"$HEAP" \
   -cp "$CP" "$CLASS" "$@"
