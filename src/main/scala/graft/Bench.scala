@@ -44,6 +44,15 @@ object Bench {
       "q4_claim_ordering", "q14_time_travel",
       // drive the four storage backends request-by-request / item-by-item (S11)
       "s11_backend_parity", "s11_dataset_parity")
+    // A leaf (or the warm-up, or the crawl) that throws records no time:
+    // its exception class goes to `errors` and its stack trace to stderr.
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def failed(name: String, e: Throwable): Unit = {
+      System.err.println(s"graft.Bench: $name failed")
+      e.printStackTrace()
+      errors(name) = e.getClass.getName
+    }
+
     // Untimed JVM/codegen warm-up: the first timed query otherwise absorbs
     // one-time Catalyst/whole-stage-codegen/classloading cost (~3-4 s) that
     // belongs to the JVM, not the query (r3 bench read a 5-row aggregate at
@@ -56,15 +65,17 @@ object Bench {
           org.apache.spark.sql.functions.concat_ws("", org.apache.spark.sql.functions.lit("https://h"),
             org.apache.spark.sql.functions.col("user_id"), org.apache.spark.sql.functions.lit(".example.com/"))).as("h"))
         .groupBy("h").count().count()
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable => failed("warmup", e) }
 
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot(q => fixtureEntries.contains(q._1))
       .foreach { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => }
-        results(name) = (System.nanoTime() - t0) / 1e9
+        try {
+          fn(spark, sfDir).count()
+          results(name) = (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable => failed(name, e) }
       }
 
     // headline crawl: 88k-page synthetic web, wide seeds, full semantics
@@ -99,13 +110,14 @@ object Bench {
           "crawl_images_per_sec" -> r.emittedImageCount / secs,
           "crawl_processed" -> r.processedCount.toDouble
         )
-      } catch { case e: Throwable => Map("crawl_error" -> 1.0) }
+      } catch { case e: Throwable => failed("crawl_44k_pages", e); Map("crawl_error" -> 1.0) }
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val errs = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}")
     val extra = crawlStats.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")
     val total = results.values.sum
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$extra,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,$extra,"sf":"$sfDir"}"""
     )
     spark.stop()
   }

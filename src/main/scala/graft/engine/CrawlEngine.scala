@@ -738,7 +738,10 @@ final class CrawlEngine(
           col("label").as("r_label"),
           col("session_id").as("r_session"),
           col("retry_count").as("r_retry"),
-          col("last_proxy_tier").as("r_last_tier")
+          col("last_proxy_tier").as("r_last_tier"),
+          // every enqueue candidate comes from one of these links, so their
+          // sum bounds the batch's candidates (the commit's join shape)
+          when(col("links").isNull, 0).otherwise(size(col("links"))).as("n_links")
         )
 
       // --- ONE bookkeeping read of the pin, before the commit ------------------
@@ -746,7 +749,7 @@ final class CrawlEngine(
       // mode collects every row in claim order; bench mode folds the rows
       // into one aggregate by (outcome, retry count, and host when
       // politeness is on). Either gives the claimed count, the outcome and
-      // image counters, and the politeness inputs.
+      // image counters, the politeness inputs, and the candidate bound.
       val dispositionRows: Array[org.apache.spark.sql.Row] =
         if (!trackOrder) Array.empty
         else trace("outcomes")(disposition.collect().sortBy(_.getInt(0)))
@@ -761,11 +764,15 @@ final class CrawlEngine(
           disposition
             .groupBy((Seq(col("outcome"), col("r_retry")) ++
               (if (enforcePoliteness) Seq(col("host")) else Nil)): _*)
-            .agg(count(lit(1)).as("cnt"), (sum(col("n_images")).as("imgs") +: polite): _*)
+            .agg(count(lit(1)).as("cnt"),
+              (sum(col("n_images")).as("imgs") +: sum(col("n_links")).as("links") +: polite): _*)
             .collect()
         }
       val claimedCount =
         if (trackOrder) dispositionRows.length.toLong else aggRows.iterator.map(_.getAs[Long]("cnt")).sum
+      val candBound =
+        if (trackOrder) dispositionRows.iterator.map(_.getAs[Int]("n_links").toLong).sum
+        else aggRows.iterator.map(_.getAs[Long]("links")).sum
 
       if (claimedCount == 0) {
         pin.unpersist(false)
@@ -1108,7 +1115,8 @@ final class CrawlEngine(
         trace("commit")(store.commitBatch(
           candidates,
           terminal,
-          reclaimEvents(withAssignedTier)
+          reclaimEvents(withAssignedTier),
+          candBound
         ))
         // politeness inputs of this batch: claimed rows and 429s per host,
         // and the largest Retry-After header (P3) per host

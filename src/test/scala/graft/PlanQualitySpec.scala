@@ -75,6 +75,76 @@ class PlanQualitySpec extends SparkSpec {
     assert(small.nonEmpty && small.forall(_ == 4), store.state().queryExecution.analyzed.toString)
   }
 
+  test("above the broadcast-semi state size the engine's commit takes its shape from the passed bound") {
+    import graft.queue.FrontierStore
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // a store whose committed state already holds BroadcastSemiMinStateRows
+    // handled rows, on a host outside the crawled web
+    val root = java.nio.file.Files.createTempDirectory("planbound").toString
+    val n = FrontierStore.BroadcastSemiMinStateRows
+    val key = concat(lit("old-"), col("id"))
+    spark.range(n).select(FrontierStore.eventSchema.fields.toSeq.map { f =>
+      (f.name match {
+        case "unique_key" => key
+        case "key64" => xxhash64(key)
+        case "host" => lit("old.invalid")
+        case "host_hash" => xxhash64(lit("old.invalid"))
+        case "status" => lit(graft.schema.Status.Handled)
+        case "seq" | "event_seq" => col("id")
+        case "forefront_seq" => lit(-1L)
+        case "batch_id" => lit(1L)
+        case _ => lit(null)
+      }).cast(f.dataType).as(f.name)
+    }: _*).write.parquet(s"$root/log/delta-000001")
+    FrontierStore.Manifest.writeAtomic(java.nio.file.Paths.get(s"$root/manifest.json"),
+      FrontierStore.Manifest(1L, n, 0L, n, None, Vector("delta-000001")))
+    // the plan of every delta write after the seed commit (batch ids 1 and 2)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.analyzed match {
+          case c: InsertIntoHadoopFsRelationCommand
+              if c.outputPath.getName.startsWith("delta-") && c.outputPath.getName.drop(6).toInt > 2 =>
+            plans.add(qe.executedPlan.toString)
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sp = graft.fixtures.WebSpec(hosts = 2, pagesPerHost = 8, otherOrgPages = 2, subHostPages = 2)
+    import spark.implicits._
+    val pages = spark.createDataset(
+      (0L until sp.totalPages.toLong).map(g => graft.fixtures.SyntheticWeb.pageAt(sp, g))).toDF()
+    val robots = graft.fixtures.SyntheticWeb.allRobots(sp)
+      .map(r => r.host -> graft.canon.Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
+    val store = new FrontierStore(spark, root)
+    val engine = new graft.engine.CrawlEngine(spark, store, pages, robots, graft.oracle.CrawlConfig(),
+      claimBatchSize = 4096, trackImages = false, trackOrder = false,
+      statusAtFn = (url, attempt) => graft.fixtures.SyntheticWeb.statusAt(sp,
+        graft.oracle.CrawlOracle.hostIdx(sp, graft.canon.UrlCanon.parse(url).host),
+        graft.oracle.CrawlOracle.pageIdx(url), attempt))
+    spark.listenerManager.register(listener)
+    val result =
+      try {
+        val r = engine.run((0 until 8).map(i => graft.fixtures.SyntheticWeb.urlOf(sp, 0, i)))
+        val deadline = System.currentTimeMillis() + 20000L
+        while (plans.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(200)
+        r
+      } finally {
+        spark.listenerManager.unregister(listener)
+        // the store keeps its large state cached; the suites that follow
+        // in this JVM need the heap back
+        spark.catalog.clearCache()
+      }
+    assert(result.processedCount > 8)
+    // the candidates meet the state in a broadcast LEFT SEMI join, which
+    // scans the large state in place; the shuffled left join would
+    // exchange all of it
+    assert(plans.size >= 2, s"${plans.size} batch commits observed")
+    plans.forEach(p => assert(p.contains("LeftSemi") && p.contains("BroadcastHashJoin"), p))
+  }
+
   test("brute-force ANN broadcasts the small query side (no shuffle of the corpus)") {
     val emb = spark.read.parquet(s"${sf("sf0.001")}/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))

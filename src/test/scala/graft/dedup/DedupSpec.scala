@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.canon.Hashing
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Bloom seen-filter (Q2) + cuckoo spill tier semantics. */
 class DedupSpec extends SparkSpec {
@@ -134,6 +135,141 @@ class DedupSpec extends SparkSpec {
     // exact mode has no driver-side answer
     val exact = new graft.queue.FrontierStore(spark, Files.createTempDirectory("seedexact").toString)
     assert(exact.knownKeys(again).isEmpty)
+  }
+
+  /** Bytes under `dir`, recursively. */
+  private def treeBytes(dir: String): Long = {
+    val files = Files.walk(java.nio.file.Paths.get(dir))
+    try files.iterator.asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
+    finally files.close()
+  }
+
+  private def shardFiles(dir: String): Seq[String] =
+    Files.list(java.nio.file.Paths.get(dir)).iterator.asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".bloom")).toSeq
+
+  private def runVersions(dir: String): Seq[Long] =
+    Files.list(java.nio.file.Paths.get(dir, "runs")).iterator.asScala.map(_.getFileName.toString)
+      .collect { case n if n.endsWith(".keys") => n.split("-")(1).toLong }.toSeq
+
+  private def bytesOf(f: org.apache.spark.util.sketch.BloomFilter): Seq[Byte] =
+    BloomShardStore.serialize(f).toSeq
+
+  test("shard store: a fold appends its keys as runs and rewrites no shard") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("shardfold").toString
+    val s = new BloomShardStore(dir, buckets = 16, expectedPerBucket = 10000, fpp = 1e-7)
+    val before = treeBytes(dir)
+    val keys = (0 until 200).map(i => Hashing.xxh64(s"fold-$i"))
+    s.fold(keys.toDF("key64"), newVersion = 1L)
+    assert(shardFiles(dir).isEmpty, shardFiles(dir))
+    // 8 bytes a key plus the version marker — not one filter per touched bucket
+    val grown = treeBytes(dir) - before
+    assert(grown <= 200 * 8 + 64, s"bloom/ grew by $grown bytes for 200 keys")
+    assert(keys.forall(s.mightContain(_)))
+  }
+
+  test("shard store: the cached filter at version v is bit-identical to direct puts of the keys through v") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.util.sketch.BloomFilter
+    val dir = Files.createTempDirectory("shardbits").toString
+    val s = new BloomShardStore(dir, buckets = 4, expectedPerBucket = 1000, fpp = 1e-5)
+    val gens = (1 to 4).map(v => (0 until 150).map(i => Hashing.xxh64(s"g$v-$i")))
+    def direct(bucket: Int, through: Int): Seq[Byte] = {
+      val f = BloomFilter.create(1000, 1e-5)
+      gens.take(through).flatten.filter(s.bucketOf(_) == bucket).foreach(f.putLong)
+      bytesOf(f)
+    }
+    def check(v: Int): Unit = (0 until 4).foreach { b =>
+      assert(bytesOf(BloomShardStore.ShardCache.get(s, b, v)) == direct(b, v), s"bucket $b at version $v")
+    }
+    s.fold(gens(0).toDF("key64"), 1L)
+    s.fold(gens(1).toDF("key64"), 2L)
+    s.fold(gens(2).toDF("key64"), 3L)
+    check(2) // built from runs 1 and 2; run 3 is above the asked version
+    check(3) // caught up from the cached version-2 filter with run 3
+    s.foldCounting(gens(3).toDF("key64"), lit(true), Nil, 4L, merge = true)
+    assert(s.mergedThrough == 4L && shardFiles(dir).size == 4)
+    check(4) // rebuilt from the merged base shards
+    s.dropMergedRuns()
+    assert(runVersions(dir).isEmpty)
+    // a fresh executor (no cached filter) reads the same bits from the base
+    assert((0 until 4).forall(b => bytesOf(BloomShardStore.readShard(BloomShardStore.shardPath(dir, b))) == direct(b, 4)))
+  }
+
+  test("shard store: a run above the version is invisible until its fold is replayed") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("shardreplay").toString
+    val s = new BloomShardStore(dir, buckets = 8, expectedPerBucket = 1000, fpp = 1e-7)
+    val early = (0 until 100).map(i => s"early-$i")
+    s.fold(early.map(Hashing.xxh64).toDF("key64"), 1L)
+    // a fold whose runs are durable but whose version move was lost
+    s.fold(Seq(Hashing.xxh64("late")).toDF("key64"), 2L)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "version"), "1")
+    assert(runVersions(dir).contains(2L))
+    def probed(): Map[String, Boolean] = s.probe((early :+ "late").toDF("unique_key"), "unique_key")
+      .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    assert(!s.mightContain(Hashing.xxh64("late")))
+    val p1 = probed()
+    assert(!p1("late") && early.forall(p1))
+    // the replayed fold at that version succeeds and publishes the key
+    s.fold(Seq(Hashing.xxh64("late")).toDF("key64"), 2L)
+    assert(s.version == 2L)
+    assert(s.mightContain(Hashing.xxh64("late")))
+    val p2 = probed()
+    assert(p2("late") && early.forall(p2))
+  }
+
+  test("shard store: a compacting commit merges the runs; the next commit's vacuum drops them") {
+    import spark.implicits._
+    def cand(ks: Seq[String]) = ks.zipWithIndex
+      .map { case (k, i) => (k, s"https://x.com/$k", "x.com", null.asInstanceOf[String], "GET", 0, false, i.toLong) }
+      .toDF("unique_key", "url", "host", "label", "method", "depth", "forefront", "cand_order")
+    val batches = (0 until 4).map(b => (b * 60 until b * 60 + 100).map(i => s"k-$i")) // overlapping
+    val probeKeys = (0 until 400).map(i => s"k-$i") // seen and never-added keys
+    val merging = Files.createTempDirectory("bloommerge").toString
+    val plain = Files.createTempDirectory("bloomplain").toString
+    val m = new graft.queue.FrontierStore(spark, merging, compactEvery = 3, bloomDedup = true, bloomBuckets = 8)
+    val p = new graft.queue.FrontierStore(spark, plain, compactEvery = 1000, bloomDedup = true, bloomBuckets = 8)
+    def sameAnswers(): Unit = {
+      assert(m.knownKeys(probeKeys) == p.knownKeys(probeKeys))
+      val bm = BloomShardStore.openOrCreate(s"$merging/bloom", 0, 0, 0)
+      val bp = BloomShardStore.openOrCreate(s"$plain/bloom", 0, 0, 0)
+      assert(bm.version == bp.version)
+      (0 until 8).foreach { b =>
+        val (fm, fp) = (BloomShardStore.ShardCache.get(bm, b, bm.version), BloomShardStore.ShardCache.get(bp, b, bp.version))
+        assert((fm == null) == (fp == null) && (fm == null || bytesOf(fm) == bytesOf(fp)), s"bucket $b")
+      }
+    }
+    batches.take(3).foreach { ks => m.addBatch(cand(ks)); p.addBatch(cand(ks)) }
+    // the third commit compacted: the base shards hold every run through it
+    val bloomDir = s"$merging/bloom"
+    assert(BloomShardStore.openOrCreate(bloomDir, 0, 0, 0).mergedThrough == 3L)
+    assert(shardFiles(bloomDir).nonEmpty && shardFiles(s"$plain/bloom").isEmpty)
+    sameAnswers()
+    m.addBatch(cand(batches(3))); p.addBatch(cand(batches(3)))
+    // its deferred vacuum dropped the merged runs; only the newest remain
+    assert(runVersions(bloomDir).nonEmpty && runVersions(bloomDir).forall(_ > 3L), runVersions(bloomDir))
+    sameAnswers()
+    assert(m.knownKeys(probeKeys).get == (0 until 280).map(i => s"k-$i").toSet)
+  }
+
+  test("shard store: an empty version file reopens as 0 and replays every committed key") {
+    import spark.implicits._
+    def cand(ks: Seq[String]) = ks.zipWithIndex
+      .map { case (k, i) => (k, s"https://x.com/$k", "x.com", null.asInstanceOf[String], "GET", 0, false, i.toLong) }
+      .toDF("unique_key", "url", "host", "label", "method", "depth", "forefront", "cand_order")
+    val root = Files.createTempDirectory("bloomempty").toString
+    new graft.queue.FrontierStore(spark, root, bloomDedup = true, bloomBuckets = 8).addBatch(cand(Seq("a", "b")))
+    // a crash in the middle of an in-place rewrite leaves the file empty
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/bloom/version"), Array.emptyByteArray)
+    val store2 = new graft.queue.FrontierStore(spark, root, bloomDedup = true, bloomBuckets = 8)
+    val report = store2.addBatch(cand(Seq("a", "c"))).collect()
+      .map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    assert(report("a") === true)
+    assert(report("c") === false)
+    assert(store2.state().count() == 3)
   }
 
   test("cuckoo: insert, lookup, delete") {
