@@ -2,7 +2,7 @@ package graft.queue
 
 import graft.schema.Status
 import graft.util.Trace
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -632,53 +632,61 @@ final class FrontierStore(
       reclaims: DataFrame,
       candBound: Long = -1L
   ): DataFrame = synchronized {
-    val (maxSeq, maxFf, maxEv) = counters
-    val S = Stride
-
-    // handled: in-progress rows -> Handled (Q6)
+    // in-progress rows, shaped like commitBatch's input: handled ones carry
+    // r_ok/r_state (Q6); reclaimed ones their new retry_count and
+    // forefront, which supersede the stored values (Q7)
     val inProg = state().filter(col("status") === Status.InProgress)
-    val handledEvents0 = inProg
-      .drop("handled_ok")
-      .join(
-        handled.select(col("unique_key").as("r_key"), col("handled_ok"), col("state").as("r_state")),
-        col("unique_key") === col("r_key"),
-        "inner"
-      )
-      .drop("r_key")
-      .withColumn("status", lit(Status.Handled))
-      .withColumn("state", col("r_state"))
-      .withColumn("lock_expires_at", lit(0L))
-      .withColumn("event_seq", dLong(maxEv + 2 * S + 1))
-      .withColumn("batch_id", dLong(batchId + 1))
-      // prior status was InProgress: its pending position was already
-      // consumed by the claim event — no epoch removal here
-      .withColumn("prev_epoch", lit(null).cast("long"))
-      .drop("r_state")
-      .select(eventCols: _*)
-
-    // reclaims: in-progress rows -> Pending with fresh tail/head position;
-    // the reclaimed values (retry_count, forefront) supersede stored ones
-    // (Q7). Tail reclaims take the seq stride ABOVE this batch's adds.
-    val reclaimEvents0 = inProg
+    val terminal = inProg.join(
+      handled.select(col("unique_key").as("r_key"), col("handled_ok").as("r_ok"), col("state").as("r_state")),
+      col("unique_key") === col("r_key"), "inner")
+    val reclaimRows = inProg
       .drop("forefront", "retry_count")
       .join(
         reclaims.select(col("unique_key").as("r_key"), col("forefront"), col("retry_count")),
-        col("unique_key") === col("r_key"),
-        "inner"
-      )
-      .drop("r_key")
-      .withColumn("__pos", pmod(xxhash64(col("unique_key")), lit(Stride / 2)) + 1)
+        col("unique_key") === col("r_key"), "inner")
+    // prior status was InProgress: its pending position was already
+    // consumed by the claim event — no epoch removal here
+    outcomeEvents(adds, terminal, reclaimRows, lit(null).cast("long"), candBound)
+  }
+
+  /** Commit `adds` with the terminal and reclaim events built from rows
+    * carrying full event columns: `terminal` plus `r_ok`/`r_state`,
+    * `reclaimRows` with their new `retry_count` and `forefront`.
+    * `prevEpoch` is the pending position each row consumes, evaluated
+    * before a reclaim's seq is reassigned. Terminal rows share one
+    * event_seq; a reclaim takes a fresh tail (or head) position in the
+    * stride ABOVE this batch's adds.
+    */
+  private def outcomeEvents(
+      adds: DataFrame,
+      terminal: DataFrame,
+      reclaimRows: DataFrame,
+      prevEpoch: Column,
+      candBound: Long
+  ): DataFrame = {
+    val (maxSeq, maxFf, maxEv) = counters
+    val S = Stride
+    val terminalEvents = terminal
+      .withColumn("status", lit(Status.Handled))
+      .withColumn("state", col("r_state"))
+      .withColumn("handled_ok", col("r_ok"))
+      .withColumn("lock_expires_at", lit(0L))
+      .withColumn("event_seq", dLong(maxEv + 2 * S + 1))
+      .withColumn("batch_id", dLong(batchId + 1))
+      .withColumn("prev_epoch", prevEpoch)
+      .select(eventCols: _*)
+    val reclaimEvents = reclaimRows
+      .withColumn("prev_epoch", prevEpoch)
+      .withColumn("__pos", pmod(xxhash64(col("unique_key")), lit(S / 2)) + 1)
       .withColumn("status", lit(Status.Pending))
       .withColumn("seq", when(col("forefront"), lit(-1L)).otherwise(dLong(maxSeq + S) + col("__pos")))
       .withColumn("forefront_seq", when(col("forefront"), dLong(maxFf + 2 * S) + col("__pos")).otherwise(lit(-1L)))
       .withColumn("lock_expires_at", lit(0L))
       .withColumn("event_seq", dLong(maxEv + 3 * S) + col("__pos"))
       .withColumn("batch_id", dLong(batchId + 1))
-      .withColumn("prev_epoch", lit(null).cast("long")) // prior InProgress
       .drop("__pos")
       .select(eventCols: _*)
-
-    commitWithAdds(adds, handledEvents0, reclaimEvents0, maxSeq, maxFf, maxEv, candBound)
+    commitWithAdds(adds, terminalEvents, reclaimEvents, maxSeq, maxFf, maxEv, candBound)
   }
 
   /** Shared core: enqueue pipeline (dedup + ordering + report) unioned with
@@ -1072,31 +1080,8 @@ final class FrontierStore(
       reclaimRows: DataFrame,
       candBound: Long = -1L
   ): Unit = synchronized {
-    val (maxSeq, maxFf, maxEv) = counters
-    val S = Stride
-    val terminalEvents = terminal
-      .withColumn("status", lit(Status.Handled))
-      .withColumn("state", col("r_state"))
-      .withColumn("handled_ok", col("r_ok"))
-      .withColumn("lock_expires_at", lit(0L))
-      .withColumn("event_seq", dLong(maxEv + 2 * S + 1))
-      .withColumn("batch_id", dLong(batchId + 1))
-      // consumes the row's (still-Pending) position — seq fields unchanged
-      .withColumn("prev_epoch", epochExpr)
-      .select(eventCols: _*)
-    val reclaimEvents = reclaimRows
-      // consumes the OLD position (computed before seq is reassigned below)
-      .withColumn("prev_epoch", epochExpr)
-      .withColumn("__pos", pmod(xxhash64(col("unique_key")), lit(S / 2)) + 1)
-      .withColumn("status", lit(Status.Pending))
-      .withColumn("seq", when(col("forefront"), lit(-1L)).otherwise(dLong(maxSeq + S) + col("__pos")))
-      .withColumn("forefront_seq", when(col("forefront"), dLong(maxFf + 2 * S) + col("__pos")).otherwise(lit(-1L)))
-      .withColumn("lock_expires_at", lit(0L))
-      .withColumn("event_seq", dLong(maxEv + 3 * S) + col("__pos"))
-      .withColumn("batch_id", dLong(batchId + 1))
-      .drop("__pos")
-      .select(eventCols: _*)
-    commitWithAdds(adds, terminalEvents, reclaimEvents, maxSeq, maxFf, maxEv, candBound)
+    // the rows were still Pending: each consumes its own position
+    outcomeEvents(adds, terminal, reclaimRows, epochExpr, candBound)
     ()
   }
 

@@ -6,18 +6,36 @@ import graft.canon.Hashing
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
-/** Bloom seen-filter (Q2) + cuckoo spill tier semantics. */
+/** Bloom seen-shards (Q2, BloomShardStore) + cuckoo spill tier semantics. */
 class DedupSpec extends SparkSpec {
 
+  /** A copy of the shard directory `dir` at a fresh path: a store opened
+    * there has no filter in the executor-local cache, so it reads cold.
+    */
+  private def coldCopy(dir: String): String = {
+    val to = Files.createTempDirectory("bloomcold")
+    val src = java.nio.file.Paths.get(dir)
+    val files = Files.walk(src)
+    try files.iterator.asScala.foreach { p =>
+      val t = to.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    } finally files.close()
+    to.toString
+  }
+
   test("bloom: no false negatives, persists and reloads") {
-    val f = BloomSeenFilter.create(buckets = 8, expectedPerBucket = 10000, fpp = 1e-7)
-    val keys = (0 until 5000).map(i => Hashing.xxh64(s"key-$i"))
-    keys.foreach(f.put)
-    assert(keys.forall(f.mightContain))
+    import spark.implicits._
     val dir = Files.createTempDirectory("bloom").toString
-    f.save(dir)
-    val g = BloomSeenFilter.load(dir).get
-    assert(keys.forall(g.mightContain))
+    val s = new BloomShardStore(dir, buckets = 8, expectedPerBucket = 10000, fpp = 1e-7)
+    val keys = (0 until 5000).map(i => Hashing.xxh64(s"key-$i"))
+    // two folds: the keys live in runs of two versions
+    s.fold(keys.take(2500).toDF("key64"), newVersion = 1L)
+    s.fold(keys.drop(2500).toDF("key64"), newVersion = 2L)
+    assert(keys.forall(s.mightContain(_)))
+    // reopened from disk alone (no cached filter at the copied path)
+    val g = BloomShardStore.openOrCreate(coldCopy(dir), 0, 0, 0)
+    assert(g.buckets == 8 && g.version == 2L)
+    assert(keys.forall(g.mightContain(_)))
     // fresh keys: at fpp 1e-7 expect zero false positives in 100k probes
     val fp = (0 until 100000).count(i => g.mightContain(Hashing.xxh64(s"other-$i")))
     assert(fp == 0, s"unexpected false positives: $fp")
@@ -25,19 +43,37 @@ class DedupSpec extends SparkSpec {
 
   test("bloom: distributed build equals driver-side build") {
     import spark.implicits._
-    val keys = (0L until 20000L).map(i => Hashing.xxh64(s"d-$i"))
-    val df = keys.toDF("key64")
-    val built = BloomSeenFilter.build(spark, df, buckets = 16, expectedPerBucket = 10000, fpp = 1e-6)
-    assert(keys.forall(built.mightContain))
-    val misses = (0 until 50000).count(i => built.mightContain(Hashing.xxh64(s"m-$i")))
+    val dir = Files.createTempDirectory("bloomagree").toString
+    val s = new BloomShardStore(dir, buckets = 16, expectedPerBucket = 10000, fpp = 1e-6)
+    val folded = (0 until 20000).map(i => s"d-$i")
+    s.fold(folded.map(Hashing.xxh64).toDF("key64"), newVersion = 1L)
+    val probeKeys = folded ++ (0 until 50000).map(i => s"m-$i")
+    // the executor-side probe answers every key as the driver's mightContain does
+    val probed = s.probe(probeKeys.toDF("unique_key"), "unique_key")
+      .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    assert(probeKeys.forall(k => probed(k) == s.mightContain(Hashing.xxh64(k))))
+    assert(folded.forall(probed))
+    val misses = (0 until 50000).count(i => probed(s"m-$i"))
     assert(misses < 5) // fpp 1e-6 over 50k probes
   }
 
   test("bloom: serialize round-trip") {
-    val f = BloomSeenFilter.create(buckets = 4, expectedPerBucket = 1000, fpp = 1e-5)
-    (0 until 500).foreach(i => f.put(Hashing.xxh64(s"s-$i")))
-    val g = BloomSeenFilter.deserialize(BloomSeenFilter.serialize(f))
-    assert((0 until 500).forall(i => g.mightContain(Hashing.xxh64(s"s-$i"))))
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val dir = Files.createTempDirectory("bloomser").toString
+    val s = new BloomShardStore(dir, buckets = 4, expectedPerBucket = 1000, fpp = 1e-5)
+    val keys = (0 until 500).map(i => Hashing.xxh64(s"s-$i"))
+    // a merging fold writes every bucket's base shard
+    s.foldCounting(keys.toDF("key64"), lit(true), Nil, 1L, merge = true)
+    (0 until 4).foreach { b =>
+      val cached = BloomShardStore.ShardCache.get(s, b, 1L)
+      val cold = BloomShardStore.readShard(BloomShardStore.shardPath(dir, b))
+      assert(bytesOf(cold) == bytesOf(cached), s"bucket $b")
+    }
+    // a store opened cold answers every key the same
+    val g = BloomShardStore.openOrCreate(coldCopy(dir), 0, 0, 0)
+    assert(keys.forall(k => g.mightContain(k) && s.mightContain(k)))
+    assert((0 until 2000).map(i => Hashing.xxh64(s"t-$i")).forall(k => g.mightContain(k) == s.mightContain(k)))
   }
 
   test("shard store: executor-side fold + probe, no whole-filter broadcast") {

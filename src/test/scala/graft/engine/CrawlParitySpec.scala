@@ -15,7 +15,8 @@ import java.nio.file.Files
   */
 class CrawlParitySpec extends SparkSpec {
 
-  private def mkEngine(spec: WebSpec, cfg: CrawlConfig, batchSize: Int, bloom: Boolean = false): CrawlEngine = {
+  private def mkEngine(spec: WebSpec, cfg: CrawlConfig, batchSize: Int, bloom: Boolean = false,
+      root: String = Files.createTempDirectory("engine").toString): CrawlEngine = {
     import spark.implicits._
     val pagesDf = spark
       .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
@@ -24,9 +25,7 @@ class CrawlParitySpec extends SparkSpec {
       .allRobots(spec)
       .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body))
       .toMap
-    val store = new FrontierStore(
-      spark, Files.createTempDirectory("engine").toString,
-      bloomDedup = bloom, bloomBuckets = 8)
+    val store = new FrontierStore(spark, root, bloomDedup = bloom, bloomBuckets = 8)
     new CrawlEngine(
       spark, store, pagesDf, robots, cfg,
       claimBatchSize = batchSize,
@@ -52,11 +51,18 @@ class CrawlParitySpec extends SparkSpec {
   test("URL-seen set + image emission parity on a full crawl (batch = 16)") {
     val cfg = CrawlConfig()
     val oracle = CrawlOracle.run(smallSpec, seeds, cfg)
-    val engine = mkEngine(smallSpec, cfg, batchSize = 16).run(seeds)
+    val root = Files.createTempDirectory("engine").toString
+    val engine = mkEngine(smallSpec, cfg, batchSize = 16, root = root).run(seeds)
     assert(engine.seenKeys == oracle.seenKeys)
     assert(engine.handledOkKeys == oracle.handledOkKeys)
     assert(engine.failedKeys == oracle.failedKeys)
     assert(engine.emittedImageIds.sorted == oracle.emittedImageIds.sorted)
+    // the image count and the metrics table's running image total agree
+    // with the ids collected
+    assert(engine.emittedImageCount == engine.emittedImageIds.size)
+    val images = spark.read.parquet(s"$root/metrics").orderBy("batch_id").select("images")
+      .collect().map(_.getLong(0))
+    assert(images.last == engine.emittedImageIds.size, images.mkString(","))
   }
 
   test("pipelined bench mode reaches the identical final state (prefetched claims, compaction crossed)") {
@@ -71,16 +77,17 @@ class CrawlParitySpec extends SparkSpec {
       .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
     // compactEvery=2: the pipelined run crosses several compaction+vacuum
     // boundaries while prefetched claims are in flight
-    val store = new FrontierStore(
-      spark, Files.createTempDirectory("pipelined").toString, compactEvery = 2)
     val sp = smallSpec
-    val engine = new CrawlEngine(
+    def benchEngine(store: FrontierStore, trackImages: Boolean) = new CrawlEngine(
       spark, store, pagesDf, robots, cfg,
-      claimBatchSize = 4, trackOrder = false, trackImages = false,
+      claimBatchSize = 4, trackOrder = false, trackImages = trackImages,
       statusAtFn = (url, attempt) => {
         val host = graft.canon.UrlCanon.parse(url).host
         SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, host), CrawlOracle.pageIdx(url), attempt)
       })
+    val store = new FrontierStore(
+      spark, Files.createTempDirectory("pipelined").toString, compactEvery = 2)
+    val engine = benchEngine(store, trackImages = false)
     val bench = engine.run(seeds)
     // same terminal work, same seen set size, same image volume — the
     // pipelined claim relaxes only ORDER, never membership
@@ -89,6 +96,13 @@ class CrawlParitySpec extends SparkSpec {
     assert(bench.emittedImageCount == parity.emittedImageIds.size)
     // the store's final state agrees key-for-key with the parity run
     assert(store.state().select("unique_key").collect().map(_.getString(0)).toSet == parity.seenKeys)
+    // trackImages collects the ids in bench mode too: the parity run's ids
+    val withIds = benchEngine(new FrontierStore(
+      spark, Files.createTempDirectory("pipelined-ids").toString, compactEvery = 2), trackImages = true)
+      .run(seeds)
+    assert(withIds.emittedImageIds.nonEmpty)
+    assert(withIds.emittedImageIds.sorted == parity.emittedImageIds.sorted)
+    assert(withIds.emittedImageCount == parity.emittedImageIds.size)
   }
 
   test("selector-parametrized extraction: img/src crawl parity (_abstract_http_crawler.py:198-219)") {

@@ -5,9 +5,18 @@ import graft.canon.Robots
 import graft.fixtures.{SyntheticWeb, WebSpec}
 import graft.oracle.{CrawlConfig, CrawlOracle}
 import graft.queue.FrontierStore
+import graft.stats.StatisticsState
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
+
+/** What the two tracking modes must agree on after a crawl: the batch
+  * count, the seen set, the per-batch metrics rows (claimed, terminal,
+  * images, processed_total) and the run statistics (runtime aside).
+  */
+private final case class ModeOutcome(
+    batches: Int, seen: Set[String], metrics: Seq[(Long, Long, Long, Long)], stats: StatisticsState)
 
 /** Checkpoint/resume (north rule: "a killed job resumes exactly") and
   * politeness enforcement (P2-P4) at the engine level.
@@ -20,11 +29,12 @@ class ResumePolitenessSpec extends SparkSpec {
   private def mkEngine(root: String, cfg: CrawlConfig, batchSize: Int,
       politeness: Boolean = false, statusOverride: (String, Int) => Int = null,
       trackOrder: Boolean = true,
-      retryAfter: (String, Int) => Option[Int] = (_, _) => None): CrawlEngine = {
+      retryAfter: (String, Int) => Option[Int] = (_, _) => None,
+      pagesFix: DataFrame => DataFrame = df => df): CrawlEngine = {
     import spark.implicits._
-    val pagesDf = spark
+    val pagesDf = pagesFix(spark
       .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
+      .toDF())
     val robots = SyntheticWeb.allRobots(spec)
       .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
     val store = new FrontierStore(spark, root)
@@ -126,22 +136,71 @@ class ResumePolitenessSpec extends SparkSpec {
     }
   }
 
+  private def modeOutcome(root: String, engine: CrawlEngine, batches: Int): ModeOutcome =
+    ModeOutcome(batches, storeOutcome(root)._1,
+      spark.read.parquet(s"$root/metrics").orderBy("batch_id")
+        .select("claimed", "terminal", "images", "processed_total").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq,
+      engine.runStats.state.copy(crawlerRuntimeMs = 0L))
+
   test("P3 Retry-After beats the exponential schedule, identically in both modes") {
     // every first fetch returns 429 with Retry-After: 5 s — five 1 s batch
     // periods of backoff where the schedule would give two
     val statusFn: (String, Int) => Int = (_, attempt) => if (attempt == 0) 429 else 200
-    def crawl(trackOrder: Boolean, header: Boolean): (Int, Set[String]) = {
+    def crawl(trackOrder: Boolean, header: Boolean): ModeOutcome = {
       val root = Files.createTempDirectory("retryafter").toString
       val ra: (String, Int) => Option[Int] = (_, attempt) => if (header && attempt == 0) Some(5) else None
-      val result = mkEngine(root, CrawlConfig(maxRequestsPerCrawl = 6), batchSize = 4,
+      val engine = mkEngine(root, CrawlConfig(maxRequestsPerCrawl = 6), batchSize = 4,
         politeness = true, statusOverride = statusFn, trackOrder = trackOrder, retryAfter = ra)
-        .run(Seq("https://h0.example.com/p/0"))
-      (result.batches, storeOutcome(root)._1)
+      modeOutcome(root, engine, engine.run(Seq("https://h0.example.com/p/0")).batches)
     }
     val parity = crawl(trackOrder = true, header = true)
     val bench = crawl(trackOrder = false, header = true)
     assert(parity == bench)
+    assert(parity.stats.requestsRetries > 0, parity)
     val schedule = crawl(trackOrder = false, header = false)
-    assert(bench._1 > schedule._1, s"Retry-After crawl ${bench._1} batches, schedule ${schedule._1}")
+    assert(bench.batches > schedule.batches, s"Retry-After crawl ${bench.batches} batches, schedule ${schedule.batches}")
+  }
+
+  test("a polite crawl through 404s, retries, redirect fails and robots skips accounts identically in both modes") {
+    // /p/3 redirects off-host (a redirect fail under SameHostname), /p/5
+    // answers 500 until its retries run out, /p/7 answers 429 once
+    val sp = spec
+    val statusFn: (String, Int) => Int = (url, attempt) =>
+      if (url.endsWith("/p/3")) 301
+      else if (url.endsWith("/p/5")) 500
+      else if (url.endsWith("/p/7") && attempt == 0) 429
+      else SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, graft.canon.UrlCanon.parse(url).host),
+        CrawlOracle.pageIdx(url), attempt)
+    val offHost: DataFrame => DataFrame = _.withColumn("redirect_to",
+      when(col("url").endsWith("/p/3"), lit("https://other.org/p/1")).otherwise(col("redirect_to")))
+    // added past the seed gate: a robots-disallowed page (skipped at the
+    // claim) and a page the web does not have (404)
+    val skipped = "https://h0.example.com/private/p/17"
+    val missing = "https://h0.example.com/p/999"
+    val seedUrls = for (h <- 0 until 2; i <- 0 until 8) yield s"https://h$h.example.com/p/$i"
+    def crawl(trackOrder: Boolean): ModeOutcome = {
+      import spark.implicits._
+      val root = Files.createTempDirectory("politemodes").toString
+      new FrontierStore(spark, root).addBatch(Seq(skipped, missing).zipWithIndex
+        .map { case (u, i) => (u, u, "h0.example.com", null.asInstanceOf[String], "GET", 0, false, i.toLong) }
+        .toDF("unique_key", "url", "host", "label", "method", "depth", "forefront", "cand_order"))
+      val engine = mkEngine(root, CrawlConfig(), batchSize = 8, politeness = true,
+        statusOverride = statusFn, trackOrder = trackOrder, pagesFix = offHost)
+      val result = engine.run(seedUrls)
+      if (trackOrder) {
+        // every outcome class occurred
+        assert(result.skippedRobotsKeys == Set(skipped))
+        assert(result.failedKeys.contains(missing))
+        assert(result.failedKeys.exists(_.endsWith("/p/5")))
+        assert(result.crawlOrder.exists(_.endsWith("/p/3")))
+        assert(result.processedCount > result.handledOkKeys.size + result.failedKeys.size)
+      }
+      modeOutcome(root, engine, result.batches)
+    }
+    val parity = crawl(trackOrder = true)
+    val bench = crawl(trackOrder = false)
+    assert(parity.stats.requestsRetries > 0 && parity.stats.requestsFailed > 0 && parity.metrics.last._3 > 0, parity)
+    assert(parity == bench)
   }
 }

@@ -18,7 +18,8 @@ import java.nio.file.Files
   */
 class RouterSpec extends SparkSpec {
 
-  private def mkEngine(spec: WebSpec, cfg: CrawlConfig, batchSize: Int): CrawlEngine = {
+  private def mkEngine(spec: WebSpec, cfg: CrawlConfig, batchSize: Int,
+      trackOrder: Boolean = true): CrawlEngine = {
     import spark.implicits._
     val pagesDf = spark
       .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
@@ -31,6 +32,7 @@ class RouterSpec extends SparkSpec {
     new CrawlEngine(
       spark, store, pagesDf, robots, cfg,
       claimBatchSize = batchSize,
+      trackOrder = trackOrder, trackImages = trackOrder,
       statusAtFn = (url, attempt) => {
         val host = graft.canon.UrlCanon.parse(url).host
         SyntheticWeb.statusAt(spec, CrawlOracle.hostIdx(spec, host), CrawlOracle.pageIdx(url), attempt)
@@ -69,6 +71,10 @@ class RouterSpec extends SparkSpec {
     assert(e8.handledTags.values.toSet == Set("DEF", "CAT", "PROD"))
     // product pages are leaves: no images pushed by PROD
     assert(e8.emittedImageIds.sorted == oracle.emittedImageIds.sorted)
+    // bench mode counts without the ids: PROD pages still push none
+    val bench = mkEngine(spec, cfg, batchSize = 8, trackOrder = false).runRequests(seeds)
+    assert(bench.emittedImageIds.isEmpty)
+    assert(bench.emittedImageCount == oracle.emittedImageIds.size)
   }
 
   test("labeled seeds route directly to their handler") {
