@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.fixtures.{SyntheticWeb, WebSpec}
 
 /** Driver-run benchmark: times every catalog query on SPARK_GRAFT_SF_DIR,
   * plus a synthetic-web crawl (the headline workload: frontier + dedup +
@@ -11,15 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession("graft-bench")
 
     // Correctness-fixture entries drive the store / session pool / sitemap
     // loader over tiny bounded corpora — they are state-machine gates for
@@ -81,29 +73,21 @@ object Bench {
     // headline crawl: 88k-page synthetic web, wide seeds, full semantics
     val crawlStats =
       try {
-        import graft.fixtures.{SyntheticWeb, WebSpec}
-        import spark.implicits._
         // sized so the crawl finishes in ~1-2 min even at the driver's 4-core
         // default; scaling evidence lives in tools/scaling_bench.sh
         val spec = WebSpec(hosts = 4, pagesPerHost = 10000, otherOrgPages = 2000,
           subHostPages = 2000, nImages = 20000)
-        val pagesDf = spark.range(spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)).toDF()
-        val robots = SyntheticWeb.allRobots(spec)
-          .map(r => r.host -> graft.canon.Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
+        val site = SyntheticWeb.site(spark, spec)
         val store = new graft.queue.FrontierStore(
           spark, java.nio.file.Files.createTempDirectory("bench-crawl").toString)
         val engine = new graft.engine.CrawlEngine(
-          spark, store, pagesDf, robots, graft.oracle.CrawlConfig(),
-          claimBatchSize = 32768, trackImages = false, trackOrder = false,
-          statusAtFn = (url, attempt) => {
-            val host = graft.canon.UrlCanon.parse(url).host
-            SyntheticWeb.statusAt(spec, graft.oracle.CrawlOracle.hostIdx(spec, host),
-              graft.oracle.CrawlOracle.pageIdx(url), attempt)
-          })
+          spark, store, site.pages, site.robots, graft.oracle.CrawlConfig(),
+          claimBatchSize = 32768, trackImages = false, trackOrder = false, statusAtFn = site.statusAt)
         val seeds = for { h <- 0 until 4; i <- 0 until 2000 } yield SyntheticWeb.urlOf(spec, h, i * 3 % 10000)
         val t0 = System.nanoTime()
         val r = engine.run(seeds)
         val secs = (System.nanoTime() - t0) / 1e9
+        store.close()
         results("crawl_44k_pages") = secs
         Map(
           "crawl_urls_per_sec" -> r.processedCount / secs,

@@ -13,6 +13,26 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
+  /** Cores a local session runs on: `SPARK_GRAFT_CPUS`, else 4. */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4)
+
+  /** The local session the mains and the specs run on: `local[cpus]`, one
+    * shuffle partition per core, UTC, adaptive execution on, no UI, WARN
+    * logging.
+    */
+  def localSession(appName: String, cpus: Int = defaultCpus): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 

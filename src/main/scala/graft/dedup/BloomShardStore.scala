@@ -305,6 +305,18 @@ object BloomShardStore {
 
     def evictThrough(dir: String, merged: Long): Unit =
       parsed.keySet.removeIf { case (d, n) => d == dir && runVersion(n).exists(_ <= merged) }
+
+    def evict(dir: String): Unit = parsed.keySet.removeIf(_._1 == dir)
+  }
+
+  /** Drops every filter and parsed run cached in this JVM for the shard
+    * store at `dir` (a closed or dropped store). On a cluster each
+    * executor keeps its own caches; this clears the driver's JVM, which in
+    * local mode is every executor.
+    */
+  def evict(dir: String): Unit = {
+    ShardCache.evict(dir)
+    RunCache.evict(dir)
   }
 
   /** Executor-local filter cache: one filter per (dir, bucket), tagged with
@@ -354,5 +366,7 @@ object BloomShardStore {
 
     /** Filters cached for `dir` (one per bucket at most). */
     def cachedShards(dir: String): Int = cache.keySet.asScala.count(_._1 == dir)
+
+    private[BloomShardStore] def evict(dir: String): Unit = cache.keySet.removeIf(_._1 == dir)
   }
 }

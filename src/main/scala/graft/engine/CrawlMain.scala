@@ -1,17 +1,20 @@
 package graft.engine
 
-import graft.canon.Robots
+import graft.SparkEntry
 import graft.fixtures.{SyntheticWeb, WebSpec}
-import graft.oracle.{CrawlConfig, CrawlOracle}
+import graft.oracle.CrawlConfig
 import graft.queue.FrontierStore
-import org.apache.spark.sql.SparkSession
 
 import java.nio.file.Files
 
 /** CLI surface for the crawl engine: generates the deterministic synthetic
   * web at the requested size, runs a crawl, prints one JSON summary line.
   *
-  * Usage: runMain graft.engine.CrawlMain [pagesPerHost] [hosts] [batchSize] [maxRequests] [seedsPerHost]
+  * Usage: tools/run_main.sh graft.engine.CrawlMain [pagesPerHost] [hosts] [batchSize] [maxRequests] [seedsPerHost]
+  *
+  * Runs on `SPARK_GRAFT_CPUS` cores (default 4). `GRAFT_LINK_FACTOR`
+  * multiplies every page's out-degree (default 1); `GRAFT_BLOOM` set
+  * switches the store to bloom dedup.
   */
 object CrawlMain {
   def main(args: Array[String]): Unit = {
@@ -20,43 +23,20 @@ object CrawlMain {
     val batchSize = args.lift(2).map(_.toInt).getOrElse(64)
     val maxRequests = args.lift(3).map(_.toLong).getOrElse(Long.MaxValue)
     val seedsPerHost = args.lift(4).map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-crawl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.contains("GRAFT_CODEGEN_LOG"))
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator",
-        org.apache.logging.log4j.Level.INFO)
-    import spark.implicits._
+    val cpus = SparkEntry.defaultCpus
+    val spark = SparkEntry.localSession("graft-crawl", cpus)
 
     val spec = WebSpec(hosts = hosts, pagesPerHost = pagesPerHost,
       otherOrgPages = pagesPerHost / 5, subHostPages = pagesPerHost / 5,
       nImages = pagesPerHost * 2,
       linkFactor = sys.env.getOrElse("GRAFT_LINK_FACTOR", "1").toInt)
-    val pagesDf = spark.range(spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)).toDF()
-    val robots = SyntheticWeb.allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
+    val site = SyntheticWeb.site(spark, spec)
     val store = new FrontierStore(
       spark, Files.createTempDirectory("crawl-main").toString,
       bloomDedup = sys.env.contains("GRAFT_BLOOM"))
-    val cfg = CrawlConfig(maxRequestsPerCrawl = maxRequests)
     val engine = new CrawlEngine(
-      spark, store, pagesDf, robots, cfg, claimBatchSize = batchSize,
-      trackImages = false,
-      trackOrder = false,
-      statusAtFn = (url, attempt) => {
-        val host = graft.canon.UrlCanon.parse(url).host
-        SyntheticWeb.statusAt(spec, CrawlOracle.hostIdx(spec, host), CrawlOracle.pageIdx(url), attempt)
-      }
-    )
+      spark, store, site.pages, site.robots, CrawlConfig(maxRequestsPerCrawl = maxRequests),
+      claimBatchSize = batchSize, trackImages = false, trackOrder = false, statusAtFn = site.statusAt)
     // wide seed lists model the production shape (millions of sitemap seeds):
     // the frontier is immediately wide, so claim batches run full
     val seeds = for {
@@ -74,6 +54,7 @@ object CrawlMain {
         s""""batches":${result.batches},"secs":$secs,""" +
         s""""urls_per_sec":${processed / secs},"images_per_sec":${result.emittedImageCount / secs}}"""
     )
+    store.close()
     spark.stop()
   }
 }

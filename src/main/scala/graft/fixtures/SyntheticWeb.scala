@@ -1,7 +1,8 @@
 package graft.fixtures
 
-import graft.canon.Hashing
+import graft.canon.{Hashing, Robots, RobotsRules, UrlCanon}
 import graft.schema.{PageRow, RobotsRow}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic synthetic web (FIXTURES.md §2-3). Pure functions of
   * (host, index) so the Spark engine (Dataset generated via spark.range)
@@ -29,7 +30,30 @@ final case class WebSpec(
   def totalPages: Int = hosts * pagesPerHost + otherOrgPages + subHostPages
 }
 
+/** The synthetic web as a crawl engine fetches it: the page table
+  * (PageRow schema), the parsed robots rules per host, and the status a
+  * fetch of (url, attempt) answers. A caller that varies one part copies
+  * the site (`site.copy(statusAt = ...)`) or transforms `pages`.
+  */
+final case class Site(pages: DataFrame, robots: Map[String, RobotsRules], statusAt: (String, Int) => Int)
+
 object SyntheticWeb {
+
+  /** The fetch surface of `spec`'s web: pages generated in parallel by
+    * `spark.range(n).map(pageAt)`, and a status closure that captures
+    * only `spec`, so it serializes into the engine's fetch tasks.
+    */
+  def site(spark: SparkSession, spec: WebSpec): Site = {
+    import spark.implicits._
+    Site(
+      spark.range(spec.totalPages.toLong).map(g => pageAt(spec, g)).toDF(),
+      robots(spec),
+      (url, attempt) => statusAt(spec, hostIdx(spec, UrlCanon.parse(url).host), pageIdx(url), attempt))
+  }
+
+  /** Parsed robots rules of every host, keyed by host name. */
+  def robots(spec: WebSpec): Map[String, RobotsRules] =
+    allRobots(spec).map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
 
   private def h64(parts: Any*): Long = Hashing.xxh64(parts.mkString(""))
   private def pos(l: Long): Long = l & Long.MaxValue
@@ -52,6 +76,16 @@ object SyntheticWeb {
     val prefix = if (i % 17 == 0 && i > 0) "/private/p/" else "/p/"
     s"https://${hostName(spec, h)}$prefix$i"
   }
+
+  /** Host index of a host name: the inverse of [[hostName]]. */
+  def hostIdx(spec: WebSpec, host: String): Int =
+    if (host == "other.org") spec.hosts
+    else if (host.startsWith("sub.")) spec.hosts + 1
+    else host.drop(1).takeWhile(_.isDigit).toInt
+
+  /** Page index of a page URL: the inverse of [[urlOf]] within its host. */
+  def pageIdx(url: String): Int =
+    url.substring(url.lastIndexOf('/') + 1).toInt
 
   /** Global page index <-> (host, idx) mapping for range-based generation. */
   def hostOfGlobal(spec: WebSpec, g: Long): (Int, Int) = {
@@ -83,10 +117,14 @@ object SyntheticWeb {
     else
       base match {
         case 429 => 200
-        case 500 => if (pos(h64("hard500", h, i)) % 2 == 0) 500 else 200
+        case 500 => if (hard500(spec, h, i)) 500 else 200
         case s => s
       }
   }
+
+  /** Whether page (h, i) answers 500 on every attempt. */
+  def hard500(spec: WebSpec, h: Int, i: Int): Boolean =
+    baseStatus(spec, h, i) == 500 && pos(h64("hard500", h, i)) % 2 == 0
 
   /** Redirect target on the same host; guaranteed not itself a redirect so
     * a single hop always lands on content (both engine and oracle rely on

@@ -1,6 +1,6 @@
 package graft.oracle
 
-import graft.canon.{EnqueueStrategy, Globs, Robots, RobotsRules, UniqueKey, UrlCanon}
+import graft.canon.{EnqueueStrategy, Globs, RobotsRules, UniqueKey, UrlCanon}
 import graft.fixtures.{SyntheticWeb, WebSpec}
 
 import scala.collection.mutable
@@ -312,10 +312,7 @@ object CrawlOracle {
     val pagesByUrl: Map[String, graft.schema.PageRow] =
       (0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)).map(p => p.url -> p).toMap
 
-    val robotsByHost: Map[String, RobotsRules] =
-      SyntheticWeb.allRobots(spec).map { r =>
-        r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)
-      }.toMap
+    val robotsByHost: Map[String, RobotsRules] = SyntheticWeb.robots(spec)
 
     val include = cfg.includePatterns.map(Globs.compile)
     val exclude = cfg.excludePatterns.map(Globs.compile)
@@ -544,11 +541,7 @@ object CrawlOracle {
     )
   }
 
-  def hostIdx(spec: WebSpec, host: String): Int =
-    if (host == "other.org") spec.hosts
-    else if (host.startsWith("sub.")) spec.hosts + 1
-    else host.drop(1).takeWhile(_.isDigit).toInt
+  def hostIdx(spec: WebSpec, host: String): Int = SyntheticWeb.hostIdx(spec, host)
 
-  def pageIdx(url: String): Int =
-    url.substring(url.lastIndexOf('/') + 1).toInt
+  def pageIdx(url: String): Int = SyntheticWeb.pageIdx(url)
 }

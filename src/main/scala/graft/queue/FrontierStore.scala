@@ -44,15 +44,11 @@ final class FrontierStore(
     bloomBuckets: Int = 64,
     bloomExpectedKeys: Long = 4000000L, // total capacity across buckets
     bloomFpp: Double = 1e-7, // reference default (_redis/_storage_client.py:45)
-    claimBuckets: Int = 64, // host-hash buckets for claim pruning
     claimBucketPruning: Boolean = true,
     // storage name (reference storages/_request_queue.py:112-138): a NAMED
     // queue is persistent shared data and is never purged implicitly; only
     // the unnamed default queue participates in purge-on-start
-    val name: Option[String] = None,
-    // reclaim superseded snapshot epochs + pre-compaction deltas right
-    // after each compaction (see vacuum())
-    vacuumOnCompact: Boolean = true
+    val name: Option[String] = None
 ) {
 
   import FrontierStore._
@@ -77,7 +73,7 @@ final class FrontierStore(
   // 10^10-row state every batch) -------------------------------------------
   //
   // Driver-side per-bucket upper bound on non-handled rows, keyed by
-  // pmod(host_hash, claimBuckets). Maintained from each commit's delta:
+  // pmod(host_hash, ClaimBuckets). Maintained from each commit's delta:
   //  - a Handled event is exactly -1 (handled is terminal and reachable
   //    only from a non-handled row);
   //  - a Pending event with a null `prev_epoch` is +1: a brand-new key, or
@@ -99,7 +95,7 @@ final class FrontierStore(
   // ([[drained]]).
   private val bucketNonHandled = scala.collection.mutable.HashMap.empty[Int, Long].withDefaultValue(0L)
 
-  private def bucketCol = pmod(col("host_hash"), lit(claimBuckets)).cast("int")
+  private def bucketCol = pmod(col("host_hash"), lit(ClaimBuckets)).cast("int")
 
   // ---- claim epoch-cutoff pre-filter (SCALE.md §Claim (a)) -----------------
   //
@@ -227,7 +223,7 @@ final class FrontierStore(
   private def claimableBuckets(): Option[Seq[Int]] = {
     if (!claimBucketPruning) return None
     val nonEmpty = bucketNonHandled.collect { case (b, n) if n > 0 => b }.toSeq
-    if (nonEmpty.size < claimBuckets) Some(nonEmpty) else None
+    if (nonEmpty.size < ClaimBuckets) Some(nonEmpty) else None
   }
 
 
@@ -456,7 +452,7 @@ final class FrontierStore(
     // cluster scale the un-vacuumed log grows without bound (every
     // compaction strands a snapshot epoch + compactEvery delta files).
     // Deferred to the START of the next commit (see above).
-    if (compacted && vacuumOnCompact) vacuumPending = true
+    if (compacted) vacuumPending = true
     n
   }
 
@@ -569,7 +565,7 @@ final class FrontierStore(
     // dirty buckets = buckets with rows in the current delta window; the
     // very first compaction covers everything
     val dirty: Seq[Int] =
-      if (m.bucketDirs.isEmpty) (0 until claimBuckets)
+      if (m.bucketDirs.isEmpty) (0 until ClaimBuckets)
       else
         spark.read.schema(eventSchema).parquet(m.deltas.map(n => s"$logDir/$n"): _*)
           .select(bucketCol.as("b")).distinct().collect().map(_.getInt(0)).toSeq
@@ -1183,8 +1179,25 @@ final class FrontierStore(
     Manifest.writeAtomic(manifestPath, manifest)
     bucketNonHandled.clear()
     epochPending.clear()
-    if (persistedBase != null) { persistedBase.unpersist(false); persistedBase = null }
+    release()
+  }
+
+  /** Releases what the store holds in memory: both cached state
+    * generations and, in bloom mode, the filters and parsed runs this JVM
+    * cached for its shard directory. The files stay; the next call reads
+    * them back as a fresh open would.
+    */
+  def close(): Unit = synchronized {
+    release()
+    stateRowsBound = 0L
+  }
+
+  private def release(): Unit = {
+    Seq(persistedBase, graceBase).filter(_ != null).foreach(_.unpersist(false))
+    persistedBase = null
+    graceBase = null
     stateDf = null
+    bloomShards.foreach(s => graft.dedup.BloomShardStore.evict(s.dir))
   }
 
   /** Implicit start-of-run purge (reference `purge_on_start`,
@@ -1213,6 +1226,9 @@ final class FrontierStore(
 }
 
 object FrontierStore {
+
+  /** Host-hash buckets for claim pruning: `pmod(host_hash, ClaimBuckets)`. */
+  private[graft] val ClaimBuckets: Int = 64
 
   /** Candidate batches above this row count fall back to the shuffled
     * left join in [[resolveExisting]] (a broadcast of ~10^6 keys is the

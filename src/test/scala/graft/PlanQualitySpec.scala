@@ -113,17 +113,10 @@ class PlanQualitySpec extends SparkSpec {
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val sp = graft.fixtures.WebSpec(hosts = 2, pagesPerHost = 8, otherOrgPages = 2, subHostPages = 2)
-    import spark.implicits._
-    val pages = spark.createDataset(
-      (0L until sp.totalPages.toLong).map(g => graft.fixtures.SyntheticWeb.pageAt(sp, g))).toDF()
-    val robots = graft.fixtures.SyntheticWeb.allRobots(sp)
-      .map(r => r.host -> graft.canon.Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
+    val site = graft.fixtures.SyntheticWeb.site(spark, sp)
     val store = new FrontierStore(spark, root)
-    val engine = new graft.engine.CrawlEngine(spark, store, pages, robots, graft.oracle.CrawlConfig(),
-      claimBatchSize = 4096, trackImages = false, trackOrder = false,
-      statusAtFn = (url, attempt) => graft.fixtures.SyntheticWeb.statusAt(sp,
-        graft.oracle.CrawlOracle.hostIdx(sp, graft.canon.UrlCanon.parse(url).host),
-        graft.oracle.CrawlOracle.pageIdx(url), attempt))
+    val engine = new graft.engine.CrawlEngine(spark, store, site.pages, site.robots, graft.oracle.CrawlConfig(),
+      claimBatchSize = 4096, trackImages = false, trackOrder = false, statusAtFn = site.statusAt)
     spark.listenerManager.register(listener)
     val result =
       try {

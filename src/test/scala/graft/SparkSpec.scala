@@ -8,19 +8,7 @@ import org.scalatest.BeforeAndAfterAll
   * test JVM), small shuffle partitioning to keep unit runs fast.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkEntry.localSession("graft-test", cpus = 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

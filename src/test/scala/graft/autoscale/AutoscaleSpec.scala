@@ -1,10 +1,9 @@
 package graft.autoscale
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.engine.CrawlEngine
 import graft.fixtures.{SyntheticWeb, WebSpec}
-import graft.oracle.{CrawlConfig, CrawlOracle, SeedRequest}
+import graft.oracle.{CrawlConfig, SeedRequest}
 import graft.queue.FrontierStore
 
 import java.nio.file.Files
@@ -45,30 +44,19 @@ class AutoscaleSpec extends SparkSpec {
   }
 
   test("autoscaled crawl reaches the same result set as a fixed-batch crawl") {
-    import spark.implicits._
-    val spec = WebSpec(hosts = 2, pagesPerHost = 60, otherOrgPages = 6, subHostPages = 6, nImages = 40)
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb
-      .allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body))
-      .toMap
-    val statusFn: (String, Int) => Int = { (url, attempt) =>
-      val host = graft.canon.UrlCanon.parse(url).host
-      SyntheticWeb.statusAt(spec, CrawlOracle.hostIdx(spec, host), CrawlOracle.pageIdx(url), attempt)
-    }
+    val site = SyntheticWeb.site(spark,
+      WebSpec(hosts = 2, pagesPerHost = 60, otherOrgPages = 6, subHostPages = 6, nImages = 40))
     val seeds = Seq(SeedRequest("https://h0.example.com/p/1"), SeedRequest("https://h1.example.com/p/1"))
 
     val fixed = new CrawlEngine(
       spark, new FrontierStore(spark, Files.createTempDirectory("as-fixed").toString),
-      pagesDf, robots, CrawlConfig(), claimBatchSize = 8, statusAtFn = statusFn)
+      site.pages, site.robots, CrawlConfig(), claimBatchSize = 8, statusAtFn = site.statusAt)
       .runRequests(seeds)
 
     val sizer = new AutoscaledBatchSizer(minBatch = 2, maxBatch = 64, initial = 4, autoscaleEvery = 1)
     val scaled = new CrawlEngine(
       spark, new FrontierStore(spark, Files.createTempDirectory("as-scaled").toString),
-      pagesDf, robots, CrawlConfig(), claimBatchSize = 4, statusAtFn = statusFn,
+      site.pages, site.robots, CrawlConfig(), claimBatchSize = 4, statusAtFn = site.statusAt,
       batchSizer = Some(sizer))
       .runRequests(seeds)
 

@@ -6,7 +6,7 @@ import graft.canon.Hashing
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
-/** Bloom seen-shards (Q2, BloomShardStore) + cuckoo spill tier semantics. */
+/** Bloom seen-shards (Q2, BloomShardStore). */
 class DedupSpec extends SparkSpec {
 
   /** A copy of the shard directory `dir` at a fresh path: a store opened
@@ -306,35 +306,5 @@ class DedupSpec extends SparkSpec {
     assert(report("a") === true)
     assert(report("c") === false)
     assert(store2.state().count() == 3)
-  }
-
-  test("cuckoo: insert, lookup, delete") {
-    val f = CuckooFilter.forCapacity(10000)
-    val keys = (0 until 8000).map(i => Hashing.xxh64(s"c-$i"))
-    keys.foreach(k => assert(f.add(k)))
-    assert(keys.forall(f.mightContain))
-    // deletions actually remove (the property bloom can't provide)
-    keys.take(4000).foreach(k => assert(f.remove(k)))
-    val stillThere = keys.take(4000).count(f.mightContain)
-    // fingerprint collisions may keep a few "present"; the bulk must be gone
-    assert(stillThere < 40, s"deletion ineffective: $stillThere of 4000 still present")
-    assert(keys.drop(4000).forall(f.mightContain))
-    assert(f.size == 4000)
-  }
-
-  test("cuckoo: serialize round-trip") {
-    val f = CuckooFilter.forCapacity(1000)
-    (0 until 800).foreach(i => f.add(Hashing.xxh64(s"r-$i")))
-    val g = CuckooFilter.deserialize(f.serialize())
-    assert((0 until 800).forall(i => g.mightContain(Hashing.xxh64(s"r-$i"))))
-    assert(g.size == f.size)
-  }
-
-  test("cuckoo: low false-positive rate on fresh keys") {
-    val f = CuckooFilter.forCapacity(10000)
-    (0 until 8000).foreach(i => f.add(Hashing.xxh64(s"c-$i")))
-    val fp = (0 until 100000).count(i => f.mightContain(Hashing.xxh64(s"fresh-$i")))
-    // 16-bit fingerprints, 2x4 slots: theoretical FPR ~ 8/2^16 ~ 0.012%
-    assert(fp < 100, s"fp rate too high: $fp / 100000")
   }
 }

@@ -1,9 +1,8 @@
 package graft.engine
 
 import graft.SparkSpec
-import graft.canon.{Robots, UrlCanon}
 import graft.fixtures.{SyntheticWeb, WebSpec}
-import graft.oracle.{CrawlConfig, CrawlOracle}
+import graft.oracle.CrawlConfig
 import graft.queue.FrontierStore
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
@@ -64,18 +63,12 @@ class BatchExecutionsSpec extends SparkSpec {
 
   /** A polite bloom bench-mode engine over `spec` on the store at `root`. */
   private def politeEngine(root: String): CrawlEngine = {
-    import spark.implicits._
-    val sp = spec // the closures must not capture the suite
-    val pages = spark.createDataset((0L until sp.totalPages.toLong).map(g => SyntheticWeb.pageAt(sp, g))).toDF()
-    val robots = SyntheticWeb.allRobots(sp)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
+    val site = SyntheticWeb.site(spark, spec)
     new CrawlEngine(
-      spark, new FrontierStore(spark, root, bloomDedup = true), pages, robots, CrawlConfig(),
+      spark, new FrontierStore(spark, root, bloomDedup = true), site.pages, site.robots, CrawlConfig(),
       // crawl-delay 2 s hosts get 3 claims per 6 s batch: a few batches
       claimBatchSize = 2048, enforcePoliteness = true, batchPeriodMs = 6000L,
-      trackImages = false, trackOrder = false,
-      statusAtFn = (url, attempt) =>
-        SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, UrlCanon.parse(url).host), CrawlOracle.pageIdx(url), attempt))
+      trackImages = false, trackOrder = false, statusAtFn = site.statusAt)
   }
 
   test("a polite bloom micro-batch runs at most 5 Spark SQL executions") {

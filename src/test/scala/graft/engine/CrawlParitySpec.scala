@@ -1,7 +1,6 @@
 package graft.engine
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.fixtures.{SyntheticWeb, WebSpec}
 import graft.oracle.{CrawlConfig, CrawlOracle}
 import graft.queue.FrontierStore
@@ -17,23 +16,11 @@ class CrawlParitySpec extends SparkSpec {
 
   private def mkEngine(spec: WebSpec, cfg: CrawlConfig, batchSize: Int, bloom: Boolean = false,
       root: String = Files.createTempDirectory("engine").toString): CrawlEngine = {
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb
-      .allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body))
-      .toMap
+    val site = SyntheticWeb.site(spark, spec)
     val store = new FrontierStore(spark, root, bloomDedup = bloom, bloomBuckets = 8)
     new CrawlEngine(
-      spark, store, pagesDf, robots, cfg,
-      claimBatchSize = batchSize,
-      statusAtFn = (url, attempt) => {
-        val host = graft.canon.UrlCanon.parse(url).host
-        SyntheticWeb.statusAt(spec, CrawlOracle.hostIdx(spec, host), CrawlOracle.pageIdx(url), attempt)
-      }
-    )
+      spark, store, site.pages, site.robots, cfg,
+      claimBatchSize = batchSize, statusAtFn = site.statusAt)
   }
 
   val smallSpec: WebSpec = WebSpec(hosts = 2, pagesPerHost = 18, otherOrgPages = 6, subHostPages = 6, nImages = 40)
@@ -66,25 +53,15 @@ class CrawlParitySpec extends SparkSpec {
   }
 
   test("pipelined bench mode reaches the identical final state (prefetched claims, compaction crossed)") {
-    import spark.implicits._
     val cfg = CrawlConfig()
     val parity = mkEngine(smallSpec, cfg, batchSize = 4).run(seeds)
 
-    val pagesDf = spark
-      .createDataset((0L until smallSpec.totalPages.toLong).map(g => SyntheticWeb.pageAt(smallSpec, g)))
-      .toDF()
-    val robots = SyntheticWeb.allRobots(smallSpec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
+    val site = SyntheticWeb.site(spark, smallSpec)
     // compactEvery=2: the pipelined run crosses several compaction+vacuum
     // boundaries while prefetched claims are in flight
-    val sp = smallSpec
     def benchEngine(store: FrontierStore, trackImages: Boolean) = new CrawlEngine(
-      spark, store, pagesDf, robots, cfg,
-      claimBatchSize = 4, trackOrder = false, trackImages = trackImages,
-      statusAtFn = (url, attempt) => {
-        val host = graft.canon.UrlCanon.parse(url).host
-        SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, host), CrawlOracle.pageIdx(url), attempt)
-      })
+      spark, store, site.pages, site.robots, cfg,
+      claimBatchSize = 4, trackOrder = false, trackImages = trackImages, statusAtFn = site.statusAt)
     val store = new FrontierStore(
       spark, Files.createTempDirectory("pipelined").toString, compactEvery = 2)
     val engine = benchEngine(store, trackImages = false)

@@ -1,7 +1,6 @@
 package graft.engine
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.fixtures.{SyntheticWeb, WebSpec}
 import graft.oracle.CrawlConfig
 import graft.queue.FrontierStore
@@ -22,14 +21,9 @@ class HandlerTimeoutSpec extends SparkSpec {
   private def mkEngine(
       cfg: CrawlConfig,
       statusFn: (String, Int) => Int): (CrawlEngine, FrontierStore) = {
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until webSpec.totalPages.toLong).map(g => SyntheticWeb.pageAt(webSpec, g)))
-      .toDF()
-    val robots = SyntheticWeb.allRobots(webSpec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
+    val site = SyntheticWeb.site(spark, webSpec)
     val store = new FrontierStore(spark, Files.createTempDirectory("rht").toString)
-    (new CrawlEngine(spark, store, pagesDf, robots, cfg, claimBatchSize = 4,
+    (new CrawlEngine(spark, store, site.pages, site.robots, cfg, claimBatchSize = 4,
       statusAtFn = statusFn), store)
   }
 

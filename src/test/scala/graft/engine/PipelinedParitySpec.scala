@@ -1,7 +1,6 @@
 package graft.engine
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.fixtures.{SyntheticWeb, WebSpec}
 import graft.oracle.{CrawlConfig, CrawlOracle}
 import graft.queue.FrontierStore
@@ -30,26 +29,12 @@ class PipelinedParitySpec extends SparkSpec {
   val deepSpec: WebSpec = WebSpec(hosts = 2, pagesPerHost = 60, otherOrgPages = 6, subHostPages = 6, nImages = 40)
   val seeds = Seq("https://h0.example.com/p/0", "https://h1.example.com/p/0")
 
-  private def mkEngine(sp0: WebSpec, cfg: CrawlConfig, batchSize: Int): CrawlEngine = {
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until sp0.totalPages.toLong).map(g => SyntheticWeb.pageAt(sp0, g)))
-      .toDF()
-    val robots = SyntheticWeb
-      .allRobots(sp0)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body))
-      .toMap
+  private def mkEngine(spec: WebSpec, cfg: CrawlConfig, batchSize: Int): CrawlEngine = {
+    val site = SyntheticWeb.site(spark, spec)
     new CrawlEngine(
       spark, new FrontierStore(spark, Files.createTempDirectory("pipepar").toString),
-      pagesDf, robots, cfg,
-      claimBatchSize = batchSize,
-      statusAtFn = { val sp = sp0
-        (url, attempt) => {
-          val host = graft.canon.UrlCanon.parse(url).host
-          SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, host), CrawlOracle.pageIdx(url), attempt)
-        }
-      }
-    )
+      site.pages, site.robots, cfg,
+      claimBatchSize = batchSize, statusAtFn = site.statusAt)
   }
 
   test("parity crawl order at concurrency 1 with the prefetch engaged") {
@@ -89,9 +74,6 @@ class PipelinedParitySpec extends SparkSpec {
     // a store pre-populated by an EARLIER run with mixed forefront rows —
     // the static gate can't see them, so the per-batch in-flight check must
     val host = "h0.example.com"
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
     val store = new FrontierStore(spark, Files.createTempDirectory("pipeff").toString)
     // 16 pages, all present in the pages table (pagesPerHost = 18):
     // forefront 0..5, regular 6..15
@@ -106,7 +88,8 @@ class PipelinedParitySpec extends SparkSpec {
       col("id").as("cand_order"))
     store.addBatch(adds)
     val engine = new CrawlEngine(
-      spark, store, pagesDf, Map.empty, CrawlConfig(maxCrawlDepth = 0, respectRobots = false),
+      spark, store, SyntheticWeb.site(spark, spec).pages, Map.empty,
+      CrawlConfig(maxCrawlDepth = 0, respectRobots = false),
       claimBatchSize = 4)
     val res = engine.runRequests(Seq.empty)
     // expected total order: forefront LIFO (5..0), then regular FIFO (6..15);

@@ -1,7 +1,6 @@
 package graft.engine
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.fixtures.{SyntheticWeb, WebSpec}
 import graft.oracle.{CrawlConfig, CrawlOracle, SeedRequest}
 import graft.proxy.ProxyConfiguration
@@ -28,26 +27,14 @@ class ProxyCrawlSpec extends SparkSpec {
 
   private def mkEngineAt(root: String, cfg: CrawlConfig, batchSize: Int,
       trackOrder: Boolean = true): CrawlEngine = {
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb
-      .allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body))
-      .toMap
+    val site = SyntheticWeb.site(spark, spec)
     new CrawlEngine(
       spark, new FrontierStore(spark, root),
-      pagesDf, robots, cfg,
+      site.pages, site.robots, cfg,
       claimBatchSize = batchSize,
       trackOrder = trackOrder,
       trackImages = trackOrder,
-      statusAtFn = { val sp = spec
-        (url, attempt) => {
-          val host = graft.canon.UrlCanon.parse(url).host
-          SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, host), CrawlOracle.pageIdx(url), attempt)
-        }
-      }
+      statusAtFn = site.statusAt
     )
   }
 
@@ -55,10 +42,8 @@ class ProxyCrawlSpec extends SparkSpec {
     (1 until 300).filter(i => i % 17 != 0 && SyntheticWeb.baseStatus(spec, 0, i) == 200)
   // a page that 500s on every attempt -> retries exhaust, tiers climb
   private val iHard500: Int =
-    (1 until 300).find { i =>
-      i % 17 != 0 && SyntheticWeb.baseStatus(spec, 0, i) == 500 &&
-        SyntheticWeb.statusAt(spec, 0, i, 1) == 500
-    }.getOrElse(fail("fixture has no hard-500 page on h0 below 300"))
+    (1 until 300).find(i => i % 17 != 0 && SyntheticWeb.hard500(spec, 0, i))
+      .getOrElse(fail("fixture has no hard-500 page on h0 below 300"))
 
   test("flat rotation is session-affine and parity-exact (batch 1 and 4)") {
     def cfg() = CrawlConfig(
@@ -136,10 +121,8 @@ class ProxyCrawlSpec extends SparkSpec {
   // a hard-500 page on h1 (second host) — exercises the per-host isolation
   // of the executor-side tier fold
   private val iHard500h1: Int =
-    (1 until 300).find { i =>
-      i % 17 != 0 && SyntheticWeb.baseStatus(spec, 1, i) == 500 &&
-        SyntheticWeb.statusAt(spec, 1, i, 1) == 500
-    }.getOrElse(fail("fixture has no hard-500 page on h1 below 300"))
+    (1 until 300).find(i => i % 17 != 0 && SyntheticWeb.hard500(spec, 1, i))
+      .getOrElse(fail("fixture has no hard-500 page on h1 below 300"))
 
   test("bench mode tiered proxies: executor-side tier fold matches parity climb (VERDICT r4 #5)") {
     def cfg() = CrawlConfig(

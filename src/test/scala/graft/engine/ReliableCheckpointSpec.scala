@@ -1,9 +1,8 @@
 package graft.engine
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.fixtures.{SyntheticWeb, WebSpec}
-import graft.oracle.{CrawlConfig, CrawlOracle, SeedRequest}
+import graft.oracle.{CrawlConfig, SeedRequest}
 import graft.ops.GraphOps
 import graft.queue.FrontierStore
 
@@ -25,25 +24,11 @@ class ReliableCheckpointSpec extends SparkSpec {
   val spec: WebSpec = WebSpec(hosts = 2, pagesPerHost = 30, otherOrgPages = 4, subHostPages = 4, nImages = 30)
 
   private def runCrawl(cfg: CrawlConfig): CrawlEngine#EngineResult = {
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb
-      .allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body))
-      .toMap
+    val site = SyntheticWeb.site(spark, spec)
     val engine = new CrawlEngine(
       spark, new FrontierStore(spark, Files.createTempDirectory("relck").toString),
-      pagesDf, robots, cfg,
-      claimBatchSize = 16,
-      statusAtFn = { val sp = spec
-        (url, attempt) => {
-          val host = graft.canon.UrlCanon.parse(url).host
-          SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, host), CrawlOracle.pageIdx(url), attempt)
-        }
-      }
-    )
+      site.pages, site.robots, cfg,
+      claimBatchSize = 16, statusAtFn = site.statusAt)
     engine.runRequests(Seq(SeedRequest("https://h0.example.com/p/0")))
   }
 

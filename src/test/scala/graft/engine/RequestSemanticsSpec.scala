@@ -1,7 +1,6 @@
 package graft.engine
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.fixtures.{SyntheticWeb, WebSpec}
 import graft.oracle.{CrawlConfig, CrawlOracle, RequestOptions, SeedRequest}
 import graft.politeness.DomainThrottle
@@ -30,24 +29,11 @@ class RequestSemanticsSpec extends SparkSpec {
       batchSize: Int,
       onIdle: Int => Option[Seq[SeedRequest]] = _ => None
   ): (CrawlEngine, FrontierStore) = {
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb
-      .allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body))
-      .toMap
+    val site = SyntheticWeb.site(spark, spec)
     val store = new FrontierStore(spark, Files.createTempDirectory("engine").toString)
     val engine = new CrawlEngine(
-      spark, store, pagesDf, robots, cfg,
-      claimBatchSize = batchSize,
-      statusAtFn = (url, attempt) => {
-        val host = graft.canon.UrlCanon.parse(url).host
-        SyntheticWeb.statusAt(spec, CrawlOracle.hostIdx(spec, host), CrawlOracle.pageIdx(url), attempt)
-      },
-      onIdle = onIdle
-    )
+      spark, store, site.pages, site.robots, cfg,
+      claimBatchSize = batchSize, statusAtFn = site.statusAt, onIdle = onIdle)
     (engine, store)
   }
 
@@ -64,8 +50,7 @@ class RequestSemanticsSpec extends SparkSpec {
   }
 
   private def hard500Url: String =
-    findPage((h, i) => SyntheticWeb.baseStatus(smallSpec, h, i) == 500 &&
-      SyntheticWeb.statusAt(smallSpec, h, i, 1) == 500)
+    findPage((h, i) => SyntheticWeb.hard500(smallSpec, h, i))
 
   private def okUrl: String =
     findPage((h, i) => SyntheticWeb.baseStatus(smallSpec, h, i) == 200)
@@ -266,7 +251,7 @@ class RequestSemanticsSpec extends SparkSpec {
       .take(3).map(i => SyntheticWeb.urlOf(spec, 0, i))
     val cfg = CrawlConfig(detectBlocked = true, maxSessionRotations = 2)
     val oracle = CrawlOracle.run(spec, seeds, cfg)
-    val (engine, _) = mkEngineSpec(spec, cfg, batchSize = 1)
+    val (engine, _) = mkEngine(spec, cfg, batchSize = 1)
     val res = engine.run(seeds)
     assert(res.crawlOrder == oracle.crawlOrder)
     assert(res.failedKeys == oracle.failedKeys)
@@ -279,29 +264,12 @@ class RequestSemanticsSpec extends SparkSpec {
     assert(engine.sessionPool.retiredSessionCount > 0)
   }
 
-  private def mkEngineSpec(spec: WebSpec, cfg: CrawlConfig, batchSize: Int): (CrawlEngine, FrontierStore) = {
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb.allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
-    val store = new FrontierStore(spark, Files.createTempDirectory("engine").toString)
-    val engine = new CrawlEngine(spark, store, pagesDf, robots, cfg,
-      claimBatchSize = batchSize,
-      statusAtFn = (url, attempt) => {
-        val host = graft.canon.UrlCanon.parse(url).host
-        SyntheticWeb.statusAt(spec, CrawlOracle.hostIdx(spec, host), CrawlOracle.pageIdx(url), attempt)
-      })
-    (engine, store)
-  }
-
   test("X4 max_tasks_per_minute caps the per-batch claim budget") {
     // rate 120/min at a 1000ms batch period = 2 tasks per batch
     val seeds = (0 until 8).map(i => SeedRequest(s"https://h0.example.com/p/$i"))
       .filter(s => CrawlOracle.pageIdx(s.url) % 17 != 0)
     val cfg = CrawlConfig(maxCrawlDepth = 0, maxTasksPerMinute = Some(120))
-    val (engine, _) = mkEngineSpec(smallSpec, cfg, batchSize = 64)
+    val (engine, _) = mkEngine(smallSpec, cfg, batchSize = 64)
     val res = engine.runRequests(seeds)
     assert(res.processedCount == seeds.size)
     assert(res.batches >= (seeds.size + 1) / 2) // never more than 2 per batch
@@ -310,16 +278,10 @@ class RequestSemanticsSpec extends SparkSpec {
   }
 
   test("catch-all status classification: an unexpected status is terminal, never re-claimed (ADVICE)") {
-    import spark.implicits._
-    val spec = smallSpec
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb.allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
+    val site = SyntheticWeb.site(spark, smallSpec)
     val store = new FrontierStore(spark, Files.createTempDirectory("engine").toString)
     // statusAtFn returns 418 — outside the fixture's {200,301,404,429,500}
-    val engine = new CrawlEngine(spark, store, pagesDf, robots,
+    val engine = new CrawlEngine(spark, store, site.pages, site.robots,
       CrawlConfig(maxCrawlDepth = 0), claimBatchSize = 4, statusAtFn = (_, _) => 418)
     val res = engine.run(Seq("https://h0.example.com/p/1"))
     assert(res.batches <= 2) // terminates instead of re-claiming forever

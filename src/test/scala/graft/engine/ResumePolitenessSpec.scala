@@ -1,12 +1,10 @@
 package graft.engine
 
 import graft.SparkSpec
-import graft.canon.Robots
-import graft.fixtures.{SyntheticWeb, WebSpec}
+import graft.fixtures.{Site, SyntheticWeb, WebSpec}
 import graft.oracle.{CrawlConfig, CrawlOracle}
 import graft.queue.FrontierStore
 import graft.stats.StatisticsState
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -27,28 +25,17 @@ class ResumePolitenessSpec extends SparkSpec {
   val seeds = Seq("https://h0.example.com/p/0", "https://h1.example.com/p/0")
 
   private def mkEngine(root: String, cfg: CrawlConfig, batchSize: Int,
-      politeness: Boolean = false, statusOverride: (String, Int) => Int = null,
+      politeness: Boolean = false,
       trackOrder: Boolean = true,
       retryAfter: (String, Int) => Option[Int] = (_, _) => None,
-      pagesFix: DataFrame => DataFrame = df => df): CrawlEngine = {
-    import spark.implicits._
-    val pagesDf = pagesFix(spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF())
-    val robots = SyntheticWeb.allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
-    val store = new FrontierStore(spark, root)
-    val sp = spec // local copy: the closure must not capture the test class
+      vary: Site => Site = identity): CrawlEngine = {
+    val site = vary(SyntheticWeb.site(spark, spec))
     new CrawlEngine(
-      spark, store, pagesDf, robots, cfg, claimBatchSize = batchSize,
+      spark, new FrontierStore(spark, root), site.pages, site.robots, cfg, claimBatchSize = batchSize,
       enforcePoliteness = politeness,
       trackOrder = trackOrder,
       retryAfterFn = retryAfter,
-      statusAtFn = if (statusOverride != null) statusOverride
-        else (url, attempt) => {
-          val host = graft.canon.UrlCanon.parse(url).host
-          SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, host), CrawlOracle.pageIdx(url), attempt)
-        }
+      statusAtFn = site.statusAt
     )
   }
 
@@ -124,7 +111,7 @@ class ResumePolitenessSpec extends SparkSpec {
       val statusFn: (String, Int) => Int = (_, attempt) => if (attempt == 0) 429 else 200
       val root = Files.createTempDirectory("backoff").toString
       val result = mkEngine(root, CrawlConfig(maxRequestsPerCrawl = 6), batchSize = 4,
-        politeness = true, statusOverride = statusFn, trackOrder = trackOrder)
+        politeness = true, trackOrder = trackOrder, vary = _.copy(statusAt = statusFn))
         .run(Seq("https://h0.example.com/p/0"))
       val (_, handledOk, retried) = storeOutcome(root)
       assert(handledOk.nonEmpty)
@@ -151,7 +138,7 @@ class ResumePolitenessSpec extends SparkSpec {
       val root = Files.createTempDirectory("retryafter").toString
       val ra: (String, Int) => Option[Int] = (_, attempt) => if (header && attempt == 0) Some(5) else None
       val engine = mkEngine(root, CrawlConfig(maxRequestsPerCrawl = 6), batchSize = 4,
-        politeness = true, statusOverride = statusFn, trackOrder = trackOrder, retryAfter = ra)
+        politeness = true, trackOrder = trackOrder, retryAfter = ra, vary = _.copy(statusAt = statusFn))
       modeOutcome(root, engine, engine.run(Seq("https://h0.example.com/p/0")).batches)
     }
     val parity = crawl(trackOrder = true, header = true)
@@ -165,15 +152,17 @@ class ResumePolitenessSpec extends SparkSpec {
   test("a polite crawl through 404s, retries, redirect fails and robots skips accounts identically in both modes") {
     // /p/3 redirects off-host (a redirect fail under SameHostname), /p/5
     // answers 500 until its retries run out, /p/7 answers 429 once
-    val sp = spec
-    val statusFn: (String, Int) => Int = (url, attempt) =>
-      if (url.endsWith("/p/3")) 301
-      else if (url.endsWith("/p/5")) 500
-      else if (url.endsWith("/p/7") && attempt == 0) 429
-      else SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, graft.canon.UrlCanon.parse(url).host),
-        CrawlOracle.pageIdx(url), attempt)
-    val offHost: DataFrame => DataFrame = _.withColumn("redirect_to",
-      when(col("url").endsWith("/p/3"), lit("https://other.org/p/1")).otherwise(col("redirect_to")))
+    val offHost: Site => Site = { site =>
+      val webStatus = site.statusAt
+      site.copy(
+        pages = site.pages.withColumn("redirect_to",
+          when(col("url").endsWith("/p/3"), lit("https://other.org/p/1")).otherwise(col("redirect_to"))),
+        statusAt = (url, attempt) =>
+          if (url.endsWith("/p/3")) 301
+          else if (url.endsWith("/p/5")) 500
+          else if (url.endsWith("/p/7") && attempt == 0) 429
+          else webStatus(url, attempt))
+    }
     // added past the seed gate: a robots-disallowed page (skipped at the
     // claim) and a page the web does not have (404)
     val skipped = "https://h0.example.com/private/p/17"
@@ -186,7 +175,7 @@ class ResumePolitenessSpec extends SparkSpec {
         .map { case (u, i) => (u, u, "h0.example.com", null.asInstanceOf[String], "GET", 0, false, i.toLong) }
         .toDF("unique_key", "url", "host", "label", "method", "depth", "forefront", "cand_order"))
       val engine = mkEngine(root, CrawlConfig(), batchSize = 8, politeness = true,
-        statusOverride = statusFn, trackOrder = trackOrder, pagesFix = offHost)
+        trackOrder = trackOrder, vary = offHost)
       val result = engine.run(seedUrls)
       if (trackOrder) {
         // every outcome class occurred

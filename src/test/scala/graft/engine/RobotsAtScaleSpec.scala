@@ -1,9 +1,8 @@
 package graft.engine
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.fixtures.{SyntheticWeb, WebSpec}
-import graft.oracle.{CrawlConfig, CrawlOracle, SeedRequest}
+import graft.oracle.{CrawlConfig, SeedRequest}
 import graft.queue.FrontierStore
 
 import java.nio.file.Files
@@ -20,19 +19,7 @@ class RobotsAtScaleSpec extends SparkSpec {
   // 4002 hosts: far beyond anything a test would want in one driver map
   val spec: WebSpec = WebSpec(hosts = 4000, pagesPerHost = 3, otherOrgPages = 2, subHostPages = 2, nImages = 10)
 
-  private def pagesDf = {
-    import spark.implicits._
-    spark.createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g))).toDF()
-  }
-
   private def robotsRows = SyntheticWeb.allRobots(spec)
-
-  private def statusFn: (String, Int) => Int = { val sp = spec
-    (url, attempt) => {
-      val host = graft.canon.UrlCanon.parse(url).host
-      SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, host), CrawlOracle.pageIdx(url), attempt)
-    }
-  }
 
   test("robots-table join mode == broadcast-map mode on a 4000-host web") {
     import spark.implicits._
@@ -42,19 +29,18 @@ class RobotsAtScaleSpec extends SparkSpec {
     val variantHosts = robotsRows.groupBy(r => (r.status, r.body.take(30))).map(_._2.head.host).toSeq.sorted
     val seeds = variantHosts.take(4).map(h => SeedRequest(s"https://$h/p/0")) :+
       SeedRequest(s"https://${variantHosts.head}/private/p/0")
+    val site = SyntheticWeb.site(spark, spec)
 
     val mapEngine = new CrawlEngine(
       spark, new FrontierStore(spark, Files.createTempDirectory("robots-map").toString),
-      pagesDf,
-      robotsRows.map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap,
-      cfg, claimBatchSize = 8, statusAtFn = statusFn)
+      site.pages, site.robots, cfg, claimBatchSize = 8, statusAtFn = site.statusAt)
     val mapRes = mapEngine.runRequests(seeds)
 
     val joinEngine = new CrawlEngine(
       spark, new FrontierStore(spark, Files.createTempDirectory("robots-join").toString),
-      pagesDf,
+      site.pages,
       Map.empty, // NO whole-map structure anywhere on the driver
-      cfg, claimBatchSize = 8, statusAtFn = statusFn,
+      cfg, claimBatchSize = 8, statusAtFn = site.statusAt,
       robotsTable = Some(spark.createDataset(robotsRows).toDF()))
     val joinRes = joinEngine.runRequests(seeds)
 
@@ -72,26 +58,18 @@ class RobotsAtScaleSpec extends SparkSpec {
     // small web for speed; h1 (h%4==1) declares Crawl-delay: 2 -> quota 1/batch
     val pspec = WebSpec(hosts = 2, pagesPerHost = 14, otherOrgPages = 4, subHostPages = 4, nImages = 10)
     val pRows = SyntheticWeb.allRobots(pspec)
-    def pPages = {
-      spark.createDataset((0L until pspec.totalPages.toLong).map(g => SyntheticWeb.pageAt(pspec, g))).toDF()
-    }
-    def pStatus: (String, Int) => Int = { val sp = pspec
-      (url, attempt) => {
-        val host = graft.canon.UrlCanon.parse(url).host
-        SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, host), CrawlOracle.pageIdx(url), attempt)
-      }
-    }
+    val site = SyntheticWeb.site(spark, pspec)
     val seeds = Seq(SeedRequest("https://h1.example.com/p/0"))
     val cfg = CrawlConfig()
 
     val mapRes = new CrawlEngine(
       spark, new FrontierStore(spark, Files.createTempDirectory("pol-map").toString),
-      pPages, pRows.map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap,
-      cfg, claimBatchSize = 16, enforcePoliteness = true, statusAtFn = pStatus).runRequests(seeds)
+      site.pages, site.robots,
+      cfg, claimBatchSize = 16, enforcePoliteness = true, statusAtFn = site.statusAt).runRequests(seeds)
 
     val joinRes = new CrawlEngine(
       spark, new FrontierStore(spark, Files.createTempDirectory("pol-join").toString),
-      pPages, Map.empty, cfg, claimBatchSize = 16, enforcePoliteness = true, statusAtFn = pStatus,
+      site.pages, Map.empty, cfg, claimBatchSize = 16, enforcePoliteness = true, statusAtFn = site.statusAt,
       robotsTable = Some(spark.createDataset(pRows).toDF())).runRequests(seeds)
 
     // delay actually bit in BOTH modes: every h1 fetch needed its own batch
@@ -108,7 +86,7 @@ class RobotsAtScaleSpec extends SparkSpec {
     val lowerRows = pRows.map(r => r.copy(body = r.body.replace("Crawl-delay", "crawl-delay")))
     val lowerRes = new CrawlEngine(
       spark, new FrontierStore(spark, Files.createTempDirectory("pol-lower").toString),
-      pPages, Map.empty, cfg, claimBatchSize = 16, enforcePoliteness = true, statusAtFn = pStatus,
+      site.pages, Map.empty, cfg, claimBatchSize = 16, enforcePoliteness = true, statusAtFn = site.statusAt,
       robotsTable = Some(spark.createDataset(lowerRows).toDF())).runRequests(seeds)
     assert(lowerRes.batches >= lowerRes.crawlOrder.size,
       "lowercase crawl-delay was silently unenforced")
@@ -121,9 +99,10 @@ class RobotsAtScaleSpec extends SparkSpec {
     // variant 0 host: "Disallow: /private"; variant 3 host: 503 => disallow all
     val disallowPrivate = robotsRows.find(r => r.status == 200 && r.body.contains("/private")).get.host
     val disallowAll = robotsRows.find(_.status == 503).get.host
+    val site = SyntheticWeb.site(spark, spec)
     val engine = new CrawlEngine(
       spark, new FrontierStore(spark, Files.createTempDirectory("robots-join2").toString),
-      pagesDf, Map.empty, cfg, claimBatchSize = 4, statusAtFn = statusFn,
+      site.pages, Map.empty, cfg, claimBatchSize = 4, statusAtFn = site.statusAt,
       robotsTable = Some(spark.createDataset(robotsRows).toDF()))
     val res = engine.runRequests(Seq(
       SeedRequest(s"https://$disallowPrivate/private/p/0"), // F7: dropped at seed gate

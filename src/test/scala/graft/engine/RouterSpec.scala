@@ -1,7 +1,6 @@
 package graft.engine
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.fixtures.{SyntheticWeb, WebSpec}
 import graft.oracle.{CrawlConfig, CrawlOracle, SeedRequest}
 import graft.queue.FrontierStore
@@ -20,23 +19,13 @@ class RouterSpec extends SparkSpec {
 
   private def mkEngine(spec: WebSpec, cfg: CrawlConfig, batchSize: Int,
       trackOrder: Boolean = true): CrawlEngine = {
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb
-      .allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body))
-      .toMap
+    val site = SyntheticWeb.site(spark, spec)
     val store = new FrontierStore(spark, Files.createTempDirectory("router").toString)
     new CrawlEngine(
-      spark, store, pagesDf, robots, cfg,
+      spark, store, site.pages, site.robots, cfg,
       claimBatchSize = batchSize,
       trackOrder = trackOrder, trackImages = trackOrder,
-      statusAtFn = (url, attempt) => {
-        val host = graft.canon.UrlCanon.parse(url).host
-        SyntheticWeb.statusAt(spec, CrawlOracle.hostIdx(spec, host), CrawlOracle.pageIdx(url), attempt)
-      }
+      statusAtFn = site.statusAt
     )
   }
 

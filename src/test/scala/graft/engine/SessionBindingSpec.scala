@@ -1,7 +1,6 @@
 package graft.engine
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.fixtures.{SyntheticWeb, WebSpec}
 import graft.oracle.{CrawlConfig, CrawlOracle, RequestOptions, SeedRequest}
 import graft.queue.FrontierStore
@@ -20,23 +19,11 @@ import scala.collection.mutable
 class SessionBindingSpec extends SparkSpec {
 
   private def mkEngine(spec: WebSpec, cfg: CrawlConfig, batchSize: Int): CrawlEngine = {
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb
-      .allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body))
-      .toMap
+    val site = SyntheticWeb.site(spark, spec)
     val store = new FrontierStore(spark, Files.createTempDirectory("sessbind").toString)
     new CrawlEngine(
-      spark, store, pagesDf, robots, cfg,
-      claimBatchSize = batchSize,
-      statusAtFn = (url, attempt) => {
-        val host = graft.canon.UrlCanon.parse(url).host
-        SyntheticWeb.statusAt(spec, CrawlOracle.hostIdx(spec, host), CrawlOracle.pageIdx(url), attempt)
-      }
-    )
+      spark, store, site.pages, site.robots, cfg,
+      claimBatchSize = batchSize, statusAtFn = site.statusAt)
   }
 
   val spec: WebSpec = WebSpec(hosts = 2, pagesPerHost = 40, otherOrgPages = 6, subHostPages = 6, nImages = 40)
@@ -117,19 +104,14 @@ class SessionBindingSpec extends SparkSpec {
   }
 
   test("bound frontier rows survive a kill+resume: collision check sees persisted bindings (ADVICE r3 #3)") {
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb.allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
+    val site = SyntheticWeb.site(spark, spec)
     val root = Files.createTempDirectory("sessbind-resume").toString
     val cfg1 = CrawlConfig(preFillSessions = 3, maxCrawlDepth = 0, maxRequestsPerCrawl = 1)
     val seeds = Seq(
       SeedRequest("https://h0.example.com/p/1"), // processed before the "kill"
       SeedRequest("https://h0.example.com/p/9", sessionId = Some("session_999999")) // left pending
     )
-    val e1 = new CrawlEngine(spark, new FrontierStore(spark, root), pagesDf, robots, cfg1,
+    val e1 = new CrawlEngine(spark, new FrontierStore(spark, root), site.pages, site.robots, cfg1,
       claimBatchSize = 1)
     val r1 = e1.runRequests(seeds)
     assert(r1.processedCount == 1 && r1.collidedKeys.isEmpty)
@@ -138,7 +120,7 @@ class SessionBindingSpec extends SparkSpec {
     // bound row comes from persisted state, not this run's seeds — the
     // collision check must still fire (pre-fix it dispatched round-robin)
     val cfg2 = cfg1.copy(maxRequestsPerCrawl = Long.MaxValue)
-    val e2 = new CrawlEngine(spark, new FrontierStore(spark, root), pagesDf, robots, cfg2,
+    val e2 = new CrawlEngine(spark, new FrontierStore(spark, root), site.pages, site.robots, cfg2,
       claimBatchSize = 1)
     val r2 = e2.runRequests(Seq.empty)
     assert(r2.collidedKeys.size == 1)

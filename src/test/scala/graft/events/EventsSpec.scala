@@ -1,7 +1,6 @@
 package graft.events
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.engine.CrawlEngine
 import graft.fixtures.{SyntheticWeb, WebSpec}
 import graft.oracle.{CrawlConfig, CrawlOracle, SeedRequest}
@@ -20,25 +19,11 @@ class EventsSpec extends SparkSpec {
   val spec: WebSpec = WebSpec(hosts = 2, pagesPerHost = 40, otherOrgPages = 6, subHostPages = 6, nImages = 40)
 
   private def mkEngine(cfg: CrawlConfig, batchSize: Int): CrawlEngine = {
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb
-      .allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body))
-      .toMap
+    val site = SyntheticWeb.site(spark, spec)
     new CrawlEngine(
       spark, new FrontierStore(spark, Files.createTempDirectory("events").toString),
-      pagesDf, robots, cfg,
-      claimBatchSize = batchSize,
-      statusAtFn = { val sp = spec
-        (url, attempt) => {
-          val host = graft.canon.UrlCanon.parse(url).host
-          SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, host), CrawlOracle.pageIdx(url), attempt)
-        }
-      }
-    )
+      site.pages, site.robots, cfg,
+      claimBatchSize = batchSize, statusAtFn = site.statusAt)
   }
 
   private val okIdx: Seq[Int] =

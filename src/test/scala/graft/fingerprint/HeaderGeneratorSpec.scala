@@ -1,9 +1,8 @@
 package graft.fingerprint
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.fixtures.{SyntheticWeb, WebSpec}
-import graft.oracle.{CrawlConfig, CrawlOracle}
+import graft.oracle.CrawlConfig
 import graft.queue.FrontierStore
 
 import java.nio.file.Files
@@ -66,23 +65,13 @@ class HeaderGeneratorSpec extends SparkSpec {
 
   test("engine: dispatched requests carry their session's generated headers") {
     val spec = WebSpec(hosts = 1, pagesPerHost = 40, otherOrgPages = 2, subHostPages = 2, nImages = 10)
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb.allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
-    val sp = spec
+    val site = SyntheticWeb.site(spark, spec)
     val engine = new graft.engine.CrawlEngine(
       spark, new FrontierStore(spark, Files.createTempDirectory("hdr").toString),
-      pagesDf, robots,
+      site.pages, site.robots,
       CrawlConfig(maxCrawlDepth = 0, preFillSessions = 2, sessionPoolSize = 2, detectBlocked = true),
-      claimBatchSize = 1,
-      statusAtFn = (url, attempt) => {
-        val host = graft.canon.UrlCanon.parse(url).host
-        SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, host), CrawlOracle.pageIdx(url), attempt)
-      })
-    val okIdx = (1 until 40).filter(i => i % 17 != 0 && SyntheticWeb.baseStatus(sp, 0, i) == 200).take(4)
+      claimBatchSize = 1, statusAtFn = site.statusAt)
+    val okIdx = (1 until 40).filter(i => i % 17 != 0 && SyntheticWeb.baseStatus(spec, 0, i) == 200).take(4)
     val res = engine.run(okIdx.map(i => s"https://h0.example.com/p/$i"))
     assert(res.headerAssignments.size == 4)
     // every dispatch has a UA; the 2-session round-robin yields exactly the

@@ -1,10 +1,10 @@
 package graft.queue
 
 import graft.SparkSpec
-import graft.canon.{Hashing, Robots, UrlCanon}
+import graft.canon.Hashing
 import graft.engine.CrawlEngine
 import graft.fixtures.{SyntheticWeb, WebSpec}
-import graft.oracle.{CrawlConfig, CrawlOracle, RequestOptions}
+import graft.oracle.{CrawlConfig, RequestOptions}
 import graft.schema.Status
 import org.apache.spark.sql.functions._
 
@@ -147,14 +147,10 @@ class FrontierStoreSpec extends SparkSpec {
   test("claim bucket pruning skips exhausted host buckets, same results as unpruned") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    // pick two hosts that land in DIFFERENT claim buckets (mod 64)
+    // pick two hosts that land in DIFFERENT claim buckets
     val hosts = (0 until 40).map(i => s"h$i.example.com")
-    def bucketOf(h: String): Long = {
-      val k = graft.canon.Hashing.xxh64(h)
-      ((k % 64) + 64) % 64
-    }
     val hostA = hosts.head
-    val hostB = hosts.find(h => bucketOf(h) != bucketOf(hostA)).get
+    val hostB = hosts.find(h => claimBucketOf(h) != claimBucketOf(hostA)).get
     def candAB(): org.apache.spark.sql.DataFrame =
       (0 until 10).flatMap(i => Seq((s"a$i", hostA), (s"b$i", hostB))).zipWithIndex
         .map { case ((k, h), ord) => (k, s"https://$h/$k", h, null.asInstanceOf[String], "GET", 0, false, ord.toLong) }
@@ -235,11 +231,8 @@ class FrontierStoreSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit}
     val hosts = (0 until 40).map(i => s"h$i.example.com")
-    def bucketOf(h: String): Long = {
-      val k = graft.canon.Hashing.xxh64(h); ((k % 64) + 64) % 64
-    }
     val hostA = hosts.head
-    val hostB = hosts.find(h => bucketOf(h) != bucketOf(hostA)).get
+    val hostB = hosts.find(h => claimBucketOf(h) != claimBucketOf(hostA)).get
     def cand1(k: String, h: String, ord: Long) =
       Seq((k, s"https://$h/$k", h, null.asInstanceOf[String], "GET", 0, false, ord))
         .toDF("unique_key", "url", "host", "label", "method", "depth", "forefront", "cand_order")
@@ -250,15 +243,15 @@ class FrontierStoreSpec extends SparkSpec {
     store.addBatch(cand1("b0", hostB, 1)) // compaction #1 fires here
     val m1 = FrontierStore.Manifest.read(java.nio.file.Paths.get(s"$root/manifest.json"))
     assert(m1.deltas.isEmpty && m1.bucketDirs.nonEmpty)
-    val epochOfA1 = m1.bucketDirs(((graft.canon.Hashing.xxh64(hostA) % 64 + 64) % 64).toInt)
-    val epochOfB1 = m1.bucketDirs(((graft.canon.Hashing.xxh64(hostB) % 64 + 64) % 64).toInt)
+    val epochOfA1 = m1.bucketDirs(claimBucketOf(hostA))
+    val epochOfB1 = m1.bucketDirs(claimBucketOf(hostB))
     // window 2: touch ONLY hostB's bucket -> compaction #2 must leave
     // hostA's leaf at the old epoch
     store.addBatch(cand1("b1", hostB, 2))
     store.addBatch(cand1("b2", hostB, 3)) // compaction #2
     val m2 = FrontierStore.Manifest.read(java.nio.file.Paths.get(s"$root/manifest.json"))
-    val epochOfA2 = m2.bucketDirs(((graft.canon.Hashing.xxh64(hostA) % 64 + 64) % 64).toInt)
-    val epochOfB2 = m2.bucketDirs(((graft.canon.Hashing.xxh64(hostB) % 64 + 64) % 64).toInt)
+    val epochOfA2 = m2.bucketDirs(claimBucketOf(hostA))
+    val epochOfB2 = m2.bucketDirs(claimBucketOf(hostB))
     assert(epochOfA2 == epochOfA1, "untouched bucket was rewritten")
     assert(epochOfB2 != epochOfB1, "touched bucket kept a stale leaf")
     // state stays exact across the partial compaction + survives resume
@@ -459,24 +452,43 @@ class FrontierStoreSpec extends SparkSpec {
 
   /** A bench-mode crawl of every main-host page of `spec` into `store`. */
   private def crawlInto(store: FrontierStore, spec: WebSpec, cfg: CrawlConfig): Unit = {
-    import spark.implicits._
-    val sp = spec // the closures must not capture the suite
-    val pages = spark.createDataset((0L until sp.totalPages.toLong).map(g => SyntheticWeb.pageAt(sp, g))).toDF()
-    val robots = SyntheticWeb.allRobots(sp)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
-    val seeds = for (h <- 0 until sp.hosts; i <- 0 until sp.pagesPerHost) yield SyntheticWeb.urlOf(sp, h, i)
-    new CrawlEngine(spark, store, pages, robots, cfg,
-      claimBatchSize = 16, trackOrder = false, trackImages = false,
-      statusAtFn = (url, attempt) => SyntheticWeb.statusAt(sp,
-        CrawlOracle.hostIdx(sp, UrlCanon.parse(url).host),
-        CrawlOracle.pageIdx(url), attempt)
+    val site = SyntheticWeb.site(spark, spec)
+    val seeds = for (h <- 0 until spec.hosts; i <- 0 until spec.pagesPerHost) yield SyntheticWeb.urlOf(spec, h, i)
+    new CrawlEngine(spark, store, site.pages, site.robots, cfg,
+      claimBatchSize = 16, trackOrder = false, trackImages = false, statusAtFn = site.statusAt
     ).run(seeds)
     ()
   }
 
-  private def claimBucketOf(host: String): Int = {
-    val k = Hashing.xxh64(host)
-    (((k % 64) + 64) % 64).toInt
+  /** The store's claim bucket of `host`: pmod(xxh64(host), ClaimBuckets). */
+  private def claimBucketOf(host: String): Int =
+    java.lang.Math.floorMod(Hashing.xxh64(host), FrontierStore.ClaimBuckets.toLong).toInt
+
+  test("close() after a crawl and purge() after two commits release every cached state generation") {
+    val sc = spark.sparkContext
+    // the engine's per-batch local checkpoints are not the store's: Spark's
+    // ContextCleaner drops them once the engine is collected
+    def cached: Int = sc.getPersistentRDDs.values.count(!_.toString.contains(" at localCheckpoint at "))
+    val before = cached
+    val crawled = new FrontierStore(spark, Files.createTempDirectory("close").toString, bloomDedup = true)
+    crawlInto(crawled, WebSpec(hosts = 2, pagesPerHost = 20, otherOrgPages = 4, subHostPages = 4), CrawlConfig())
+    val rows = crawled.state().count()
+    val bloomDir = s"${crawled.root}/bloom"
+    assert(graft.dedup.BloomShardStore.ShardCache.cachedShards(bloomDir) > 0)
+    crawled.close()
+    assert(cached == before)
+    assert(graft.dedup.BloomShardStore.ShardCache.cachedShards(bloomDir) == 0)
+    // a closed store reads its files back on the next call
+    assert(crawled.state().count() == rows)
+    crawled.close()
+
+    val purged = newStore()
+    purged.addBatch(cand(Seq("a", "b"), forefront = false))
+    purged.addBatch(cand(Seq("c"), forefront = false, orderBase = 2))
+    assert(cached > before)
+    purged.purge()
+    assert(cached == before)
+    assert(purged.state().count() == 0)
   }
 
   test("after a bloom crawl with retries and session rotations every bucket bound is 0: drained") {

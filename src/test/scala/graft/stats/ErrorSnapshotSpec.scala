@@ -1,9 +1,8 @@
 package graft.stats
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.fixtures.{SyntheticWeb, WebSpec}
-import graft.oracle.{CrawlConfig, CrawlOracle}
+import graft.oracle.CrawlConfig
 import graft.queue.FrontierStore
 
 import java.nio.file.Files
@@ -39,16 +38,11 @@ class ErrorSnapshotSpec extends SparkSpec {
 
   test("one error retried N times leaves exactly one snapshot whose content is the body") {
     val spec = WebSpec(hosts = 1, pagesPerHost = 8, otherOrgPages = 2, subHostPages = 2, nImages = 10)
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb.allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
+    val site = SyntheticWeb.site(spark, spec)
     val store = new FrontierStore(spark, Files.createTempDirectory("snap").toString)
     // the single seed 500s on EVERY attempt -> 1 + maxRetries dispatches
     val engine = new graft.engine.CrawlEngine(
-      spark, store, pagesDf, robots,
+      spark, store, site.pages, site.robots,
       CrawlConfig(maxCrawlDepth = 0, captureErrorSnapshots = true),
       claimBatchSize = 4,
       statusAtFn = (_, _) => 500)
@@ -71,16 +65,11 @@ class ErrorSnapshotSpec extends SparkSpec {
 
   test("distinct failure classes produce distinct snapshot names") {
     val spec = WebSpec(hosts = 1, pagesPerHost = 10, otherOrgPages = 2, subHostPages = 2, nImages = 10)
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb.allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body)).toMap
+    val site = SyntheticWeb.site(spark, spec)
     val store = new FrontierStore(spark, Files.createTempDirectory("snap2").toString)
     // p/1 -> 404 (client), p/2 -> 500 (retryable)
     val engine = new graft.engine.CrawlEngine(
-      spark, store, pagesDf, robots,
+      spark, store, site.pages, site.robots,
       CrawlConfig(maxCrawlDepth = 0, captureErrorSnapshots = true),
       claimBatchSize = 4,
       statusAtFn = (url, _) => if (url.endsWith("/1")) 404 else 500)

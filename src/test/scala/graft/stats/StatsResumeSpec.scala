@@ -1,10 +1,9 @@
 package graft.stats
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.engine.CrawlEngine
 import graft.fixtures.{SyntheticWeb, WebSpec}
-import graft.oracle.{CrawlConfig, CrawlOracle, SeedRequest}
+import graft.oracle.{CrawlConfig, SeedRequest}
 import graft.queue.FrontierStore
 import graft.storage.KeyValueStore
 
@@ -21,24 +20,10 @@ class StatsResumeSpec extends SparkSpec {
   val seeds = Seq(SeedRequest("https://h0.example.com/p/1"), SeedRequest("https://h1.example.com/p/1"))
 
   private def mkEngine(cfg: CrawlConfig, dir: String, batchSize: Int): CrawlEngine = {
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb
-      .allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body))
-      .toMap
+    val site = SyntheticWeb.site(spark, spec)
     new CrawlEngine(
-      spark, new FrontierStore(spark, dir), pagesDf, robots, cfg,
-      claimBatchSize = batchSize,
-      statusAtFn = { val sp = spec // local copy: the lambda must not capture the suite
-        (url, attempt) => {
-          val host = graft.canon.UrlCanon.parse(url).host
-          SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, host), CrawlOracle.pageIdx(url), attempt)
-        }
-      }
-    )
+      spark, new FrontierStore(spark, dir), site.pages, site.robots, cfg,
+      claimBatchSize = batchSize, statusAtFn = site.statusAt)
   }
 
   test("interrupted + resumed run ends with an uninterrupted run's counters") {

@@ -1,10 +1,9 @@
 package graft.storage
 
 import graft.SparkSpec
-import graft.canon.Robots
 import graft.engine.CrawlEngine
 import graft.fixtures.{SyntheticWeb, WebSpec}
-import graft.oracle.{CrawlConfig, CrawlOracle, SeedRequest}
+import graft.oracle.{CrawlConfig, SeedRequest}
 import graft.queue.FrontierStore
 import graft.util.Json
 
@@ -23,24 +22,10 @@ class UseStateSpec extends SparkSpec {
   private val seeds = Seq(SeedRequest("https://h0.example.com/p/1"))
 
   private def mkEngine(dir: String): CrawlEngine = {
-    import spark.implicits._
-    val pagesDf = spark
-      .createDataset((0L until spec.totalPages.toLong).map(g => SyntheticWeb.pageAt(spec, g)))
-      .toDF()
-    val robots = SyntheticWeb
-      .allRobots(spec)
-      .map(r => r.host -> Robots.fromFetch(s"https://${r.host}", r.status, r.body))
-      .toMap
+    val site = SyntheticWeb.site(spark, spec)
     new CrawlEngine(
-      spark, new FrontierStore(spark, dir), pagesDf, robots, CrawlConfig(),
-      claimBatchSize = 4,
-      statusAtFn = { val sp = spec
-        (url, attempt) => {
-          val host = graft.canon.UrlCanon.parse(url).host
-          SyntheticWeb.statusAt(sp, CrawlOracle.hostIdx(sp, host), CrawlOracle.pageIdx(url), attempt)
-        }
-      }
-    )
+      spark, new FrontierStore(spark, dir), site.pages, site.robots, CrawlConfig(),
+      claimBatchSize = 4, statusAtFn = site.statusAt)
   }
 
   test("default on first use; repeat calls share one instance; other keys isolated") {

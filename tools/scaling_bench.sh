@@ -14,7 +14,7 @@
 #
 # Usage: tools/scaling_bench.sh [pagesPerHost] [hosts] [batch] [seedsPerHost] [linkFactor]
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 PAGES=${1:-100000}; HOSTS=${2:-4}; BATCH=${3:-262144}; SEEDS=${4:-50000}
 LINKF=${5:-8}
 OUT=/tmp/graft_scaling
